@@ -9,9 +9,14 @@ same settings hold with `spark.sql.shuffle.partitions` sized to ~2-3x cores.
 
 from __future__ import annotations
 
+import atexit
+import contextlib
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
 
 
 def _ensure_workers_can_import(spark: SparkSession) -> None:
@@ -37,6 +42,9 @@ def _ensure_workers_can_import(spark: SparkSession) -> None:
     try:
         fd, zpath = tempfile.mkstemp(prefix="fses_pkg_", suffix=".zip")
         os.close(fd)
+        # the driver's file server serves the zip to executors for as long
+        # as the SparkContext lives: remove it at interpreter exit, not now
+        atexit.register(_remove_file, zpath)
         with zipfile.ZipFile(zpath, "w") as zf:
             for root, _dirs, files in os.walk(pkg_dir):
                 for fn in files:
@@ -48,9 +56,19 @@ def _ensure_workers_can_import(spark: SparkSession) -> None:
         sc.addPyFile(zpath)
         sc._fses_pyfile_added = True
     except Exception:
-        # best-effort: a read-only FS or a restricted context must never
-        # break query building; the kernels remain usable from the repo cwd
-        pass
+        # a read-only FS or a restricted context must never break query
+        # building; the kernels remain usable from the repo cwd
+        log.warning(
+            "could not ship %s to executor Python workers; Python-boundary "
+            "queries need it importable from the workers' cwd",
+            pkg_name,
+            exc_info=True,
+        )
+
+
+def _remove_file(path: str) -> None:
+    with contextlib.suppress(OSError):
+        os.remove(path)
 
 
 def _cpus() -> int:

@@ -63,26 +63,47 @@ def apply_changelog(
 ) -> DataFrame:
     """Merge a new changelog chunk into an existing latest-state table:
     new-chunk rows win over prior state for the same PK (upsert), deletes
-    remove keys. This is the per-micro-batch MERGE of SURVEY.md §7."""
+    remove keys. This is the per-micro-batch MERGE of SURVEY.md §7.
+
+    One key-partitioned window over state rows ∪ chunk row images: per PK
+    the first row by (generation, ``ts_ms``, arrival ``_seq``), all
+    descending, wins, so any chunk row beats state whatever its
+    ``ts_ms``; a winning tombstone (``d``) drops the key. The order and
+    flag columns carry reserved ``_cdc_`` names because a row schema may
+    itself contain ``ts_ms``."""
     if isinstance(primary_key, str):
         primary_key = [primary_key]
-    chunk = latest_state_with_deletes(changelog, primary_key)
-    if state is None:
-        return chunk.filter(F.col("_deleted") == False).drop("_deleted")  # noqa: E712
-    old = state.withColumn("_deleted", F.lit(False)).withColumn("_gen", F.lit(0))
-    new = chunk.withColumn("_gen", F.lit(1))
-    w = Window.partitionBy(*primary_key).orderBy(F.col("_gen").desc())
-    return (
+    if "_seq" not in changelog.columns:
+        changelog = changelog.withColumn("_seq", F.monotonically_increasing_id())
+    meta = ["_cdc_del", "_cdc_gen", "_cdc_ts", "_cdc_seq"]
+    img = F.when(F.col("op") == "d", F.col("before")).otherwise(F.col("after"))
+    rows = changelog.filter(F.col("op").isin("c", "u", "d", "r")).select(
+        img.alias("_row"),
+        (F.col("op") == "d").alias("_cdc_del"),
+        F.lit(1).alias("_cdc_gen"),
+        F.col("ts_ms").alias("_cdc_ts"),
+        F.col("_seq").alias("_cdc_seq"),
+    ).select("_row.*", *meta)
+    if state is not None:
         # allowMissingColumns = schema evolution: a column added upstream
         # (Debezium ALTER TABLE event) appears only in the new chunk — old
         # state rows read NULL for it; a column dropped upstream persists
         # with NULLs on new rows. Same additive-merge policy as lake
         # mergeSchema; PK columns must never change (enforced by the
         # partitionBy failing loudly if they vanish).
-        old.unionByName(new, allowMissingColumns=True)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter((F.col("_rn") == 1) & (F.col("_deleted") == False))  # noqa: E712
-        .drop("_rn", "_gen", "_deleted")
+        old = state.select(
+            "*",
+            F.lit(False).alias("_cdc_del"),
+            F.lit(0).alias("_cdc_gen"),
+            F.lit(None).alias("_cdc_ts"),
+            F.lit(None).alias("_cdc_seq"),
+        )
+        rows = old.unionByName(rows, allowMissingColumns=True)
+    w = Window.partitionBy(*primary_key).orderBy(*[F.col(c).desc() for c in meta[1:]])
+    return (
+        rows.withColumn("_cdc_rn", F.row_number().over(w))
+        .filter((F.col("_cdc_rn") == 1) & ~F.col("_cdc_del"))
+        .drop("_cdc_rn", *meta)
     )
 
 
@@ -142,28 +163,6 @@ def scd2_history(
         "valid_from_ms",
         "valid_to_ms",
         F.col("valid_to_ms").isNull().alias("is_current"),
-    )
-
-
-def latest_state_with_deletes(
-    changelog: DataFrame, primary_key: list[str]
-) -> DataFrame:
-    """Like :func:`latest_state` but keeps tombstones (``_deleted`` flag) so
-    a downstream merge can propagate deletions."""
-    order_cols = ["ts_ms", "_seq"]
-    if "_seq" not in changelog.columns:
-        changelog = changelog.withColumn("_seq", F.monotonically_increasing_id())
-    img = F.when(F.col("op") == "d", F.col("before")).otherwise(F.col("after"))
-    rows = changelog.filter(F.col("op").isin("c", "u", "d", "r")).select(
-        img.alias("_row"), "op", *order_cols
-    )
-    w = Window.partitionBy(*[F.col(f"_row.{k}") for k in primary_key]).orderBy(
-        *[F.col(c).desc() for c in order_cols]
-    )
-    return (
-        rows.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("_row.*", (F.col("op") == "d").alias("_deleted"))
     )
 
 

@@ -14,7 +14,7 @@ mode with a corrupt-record column; ISO-8601 timestamp parsing.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     LongType,
@@ -98,11 +98,3 @@ def mongo_after_json(envelopes: DataFrame, row_schema: StructType) -> DataFrame:
         "ts_ms",
     )
 
-
-def changes_for_op(envelopes: DataFrame) -> DataFrame:
-    """Normalize an envelope stream to (key-image, op, ts_ms) rows: the
-    image is ``after`` for c/u/r and ``before`` for d."""
-    img = F.when(F.col("op") == "d", F.col("before")).otherwise(F.col("after"))
-    return envelopes.filter(F.col("op").isin("c", "u", "d", "r")).select(
-        img.alias("row"), "op", "ts_ms"
-    )

@@ -6,7 +6,8 @@ Per micro-batch (the materialize-then-recompute loop of SURVEY.md §7):
 2. merge it into the per-source latest-state table (upsert + deletes),
 3. re-run the downstream relational query (plain DataFrame ops) over the
    materialized states,
-4. upsert the result into the keyed sink, deleting disappeared keys.
+4. commit the result as the keyed sink's whole new content, in one write
+   (keys that disappeared from the result disappear from the sink).
 
 Step 3 recomputes rather than incrementalizes — this is exactly what makes
 retraction correct for free (flink-ddl.sql:213: totals must drop when an
@@ -22,14 +23,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from flink_streaming_etl_spark.sources.cdc import (
-    CdcSource,
-    apply_changelog,
-    latest_state_with_deletes,
-)
+from flink_streaming_etl_spark.sources.cdc import CdcSource, apply_changelog
 from flink_streaming_etl_spark.streaming.upsert_sink import KeyedParquetSink
-
-import pyspark.sql.functions as F
 
 
 class CdcPipeline:
@@ -71,22 +66,11 @@ class CdcPipeline:
 
     def run_batch(self, chunks: dict[str, DataFrame]) -> None:
         """Drive one micro-batch from already-parsed envelope chunks."""
-        delete_keys: dict[str, DataFrame] = {}
         for name, chunk in chunks.items():
             self.apply_chunk(name, chunk)
-        result = self.recompute()
-        # Delete propagation: sink keys not present in the recomputed result
-        # must be removed (a key disappears when its rows were deleted or
-        # filtered out upstream).
-        if self.sink.exists():
-            stale = self.sink.read().join(
-                result.select(*self.sink.primary_key),
-                on=self.sink.primary_key,
-                how="left_anti",
-            )
-        else:
-            stale = None
-        self.sink.merge(result, deletes=stale)
+        # Delete propagation comes with the full rewrite: a key the
+        # recomputed result lacks (deleted or filtered out upstream) is gone.
+        self.sink.merge(self.recompute(), complete=True)
 
     def run_stream(
         self,

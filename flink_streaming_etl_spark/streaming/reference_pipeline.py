@@ -261,7 +261,9 @@ class ReferencePipeline:
 
     def run_batch(self, chunks: dict[str, DataFrame]) -> None:
         """One micro-batch: merge every source's chunk once, then refresh
-        every sink from the SAME states (multi-query source sharing)."""
+        every sink from the SAME states (multi-query source sharing). Each
+        recomputed result is its sink's whole new content, committed with
+        one write; the sinks are never read back."""
         for name, chunk in chunks.items():
             src = self.sources[name]
             merged = apply_changelog(self._states.get(name), chunk, src.primary_key)
@@ -275,11 +277,4 @@ class ReferencePipeline:
                     f"query '{name}' does not produce upsert key {missing} "
                     f"required by its sink"
                 )
-            stale = (
-                sink.read().join(
-                    result.select(*sink.primary_key), on=sink.primary_key, how="left_anti"
-                )
-                if sink.exists()
-                else None
-            )
-            sink.merge(result, deletes=stale)
+            sink.merge(result, complete=True)

@@ -2,8 +2,10 @@
 
 Stand-in for the reference's Elasticsearch-7 upsert sink (flink-ddl.sql:
 96-109: PK-keyed index, several queries share one index): a parquet-backed
-keyed table that merges each micro-batch by primary key. On a real cluster
-the same ``merge`` call targets Delta ``MERGE INTO`` or the ES connector
+keyed table that merges each micro-batch by primary key, or, from a
+full-recompute loop, takes the result as its whole new content in one
+write (``merge(result, complete=True)``). On a real cluster the same
+``merge`` call targets Delta ``MERGE INTO`` or the ES connector
 (`es.write.operation=upsert`, `es.mapping.id=id`); the orchestration and
 semantics here are identical.
 
@@ -36,35 +38,47 @@ class KeyedParquetSink:
     def read(self) -> DataFrame:
         return self.spark.read.parquet(self.path)
 
-    def merge(self, batch: DataFrame, deletes: DataFrame | None = None) -> None:
+    def merge(self, batch: DataFrame, deletes: DataFrame | None = None, *, complete=False) -> None:
         """Upsert ``batch`` rows by PK; drop PKs present in ``deletes``.
+        With ``complete=True`` ``batch`` is the table's whole new content:
+        it replaces the table without reading it.
 
         Dotted ES field names (flink-ddl.sql:98-102) are handled upstream
         by nesting into structs (see ``nest_dotted``)."""
+        current = self.read() if self.exists() and not complete else None
+        replace_table(self._upsert(current, batch, deletes), self.path)
+
+    def _upsert(
+        self, current: DataFrame | None, batch: DataFrame, deletes: DataFrame | None
+    ) -> DataFrame:
+        """``current`` upserted with ``batch``, minus the keys in ``deletes``."""
         pk = self.primary_key
-        if self.exists():
-            current = self.read()
+        if current is None:
+            merged = batch.dropDuplicates(pk)
+        else:
+            w = Window.partitionBy(*pk).orderBy(F.col("_gen").desc())
             merged = (
                 current.withColumn("_gen", F.lit(0))
                 .unionByName(batch.withColumn("_gen", F.lit(1)))
-            )
-            w = Window.partitionBy(*pk).orderBy(F.col("_gen").desc())
-            merged = (
-                merged.withColumn("_rn", F.row_number().over(w))
+                .withColumn("_rn", F.row_number().over(w))
                 .filter(F.col("_rn") == 1)
                 .drop("_rn", "_gen")
             )
-        else:
-            merged = batch.dropDuplicates(pk)
         if deletes is not None:
             merged = merged.join(
                 deletes.select(*pk).dropDuplicates(pk), on=pk, how="left_anti"
             )
-        tmp = self.path + ".tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(self.path):
-            shutil.rmtree(self.path)
-        os.replace(tmp, self.path)
+        return merged
+
+
+def replace_table(content: DataFrame, path: str, *partition_by: str) -> None:
+    """Make ``content`` the whole table at ``path``: write it to a sibling
+    ``.tmp`` directory, then swap that in for the old one."""
+    tmp = path + ".tmp"
+    content.write.mode("overwrite").partitionBy(*partition_by).parquet(tmp)
+    if os.path.exists(path):
+        shutil.rmtree(path)
+    os.replace(tmp, path)
 
 
 def nest_dotted(df: DataFrame) -> DataFrame:
@@ -130,8 +144,11 @@ class BucketPartitionedSink(KeyedParquetSink):
     def read(self) -> DataFrame:
         return self.spark.read.parquet(self.path).drop("_bucket")
 
-    def merge(self, batch: DataFrame, deletes: DataFrame | None = None) -> None:
-        pk = self.primary_key
+    def merge(self, batch: DataFrame, deletes: DataFrame | None = None, *, complete=False) -> None:
+        if complete:  # every bucket changes: rewrite the table, layout kept
+            content = self._upsert(None, batch, deletes).withColumn("_bucket", self._bucket())
+            replace_table(content, self.path, "_bucket")
+            return
         batch = batch.withColumn("_bucket", self._bucket())
         buckets = batch.select("_bucket")
         if deletes is not None:
@@ -141,27 +158,13 @@ class BucketPartitionedSink(KeyedParquetSink):
         if not touched:
             return
 
-        if self.exists():
-            current = (
-                self.spark.read.parquet(self.path)
-                .filter(F.col("_bucket").isin(touched))  # partition-pruned scan
-            )
-            merged = (
-                current.withColumn("_gen", F.lit(0))
-                .unionByName(batch.withColumn("_gen", F.lit(1)))
-            )
-            w = Window.partitionBy(*pk).orderBy(F.col("_gen").desc())
-            merged = (
-                merged.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn", "_gen")
-            )
-        else:
-            merged = batch.dropDuplicates(pk)
-        if deletes is not None:
-            merged = merged.join(
-                deletes.select(*pk).dropDuplicates(pk), on=pk, how="left_anti"
-            )
+        current = (
+            self.spark.read.parquet(self.path)
+            .filter(F.col("_bucket").isin(touched))  # partition-pruned scan
+            if self.exists()
+            else None
+        )
+        merged = self._upsert(current, batch, deletes)
         # materialize once: the result feeds both the write and the
         # emptied-bucket check (on a cluster: reliable checkpoint dir)
         merged = merged.localCheckpoint(eager=True)
@@ -333,8 +336,4 @@ class AdditivePartialSink:
                     "refusing to store silent NULLs"
                 )
             merged = merged.drop(*[f"__had_{c}" for c in self.decimal_cols])
-        tmp = self.path + ".tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(self.path):
-            shutil.rmtree(self.path)
-        os.replace(tmp, self.path)
+        replace_table(merged, self.path)

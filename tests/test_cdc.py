@@ -450,6 +450,8 @@ def test_cdc_pipeline_with_bucket_partitioned_sink(spark, tmp_path):
         env("d", before=order("o3", "u2", 30.0, "created"), ts=5),
     ])})
     assert sink_rows(pipe.sink) == {"u1|2020-07-30": (100.0, 1)}
+    # the full-content commit keeps the _bucket= layout partial merges read
+    assert sink.exists()
 
 
 def test_single_topic_multi_table_stream(spark, tmp_path):

@@ -67,11 +67,17 @@ def test_apply_changelog_equals_model(spark, events, n_chunks):
     ]
     # Single-shot reduction.
     single = latest_state(src.parse(raw_df(spark, lines)), "id")
-    # Incremental reduction over an arbitrary chunking.
+    # Incremental reduction over an arbitrary chunking. Each chunk's ts_ms
+    # counts from 1 again: a later chunk must beat state even when its
+    # ts_ms is lower.
     size = max(1, len(lines) // n_chunks)
     state = None
     for i in range(0, len(lines), size):
-        chunk = src.parse(raw_df(spark, lines[i : i + size]))
+        chunk_lines = [
+            _envelope(op, key, status, amount, ts)
+            for ts, (op, key, status, amount) in enumerate(events[i : i + size], start=1)
+        ]
+        chunk = src.parse(raw_df(spark, chunk_lines))
         state = src.snapshot_then_changelog(state, chunk) if state is not None else None
         if state is None:
             from flink_streaming_etl_spark.sources.cdc import apply_changelog

@@ -649,3 +649,54 @@ def test_media_ppm_pipeline_stays_arrow_batched(spark):
         p = plan_text(df)
         assert "BatchEvalPython" not in p
         assert "MapInPandas" in p
+
+
+def test_apply_changelog_is_one_key_shuffle(spark):
+    """Folding a changelog chunk into latest state is ONE window over
+    state rows ∪ chunk row images: a single hash Exchange on the PK (a
+    separate reduction of the chunk would plan a second one)."""
+    import re
+
+    from flink_streaming_etl_spark.sources.cdc import CdcSource, apply_changelog
+    from tests.test_cdc import ORDER_SCHEMA, env, order, raw_df
+
+    src = CdcSource("orders", ORDER_SCHEMA, "id")
+    first = src.parse(raw_df(spark, [env("c", order("o1", "u1", 1.0, "payed"), ts=1)]))
+    state = apply_changelog(None, first, "id").localCheckpoint(eager=True)
+    chunk = src.parse(raw_df(spark, [
+        env("u", order("o1", "u1", 2.0, "closed"), before=order("o1", "u1", 1.0, "payed"), ts=2),
+        env("d", before=order("o2", "u1", 3.0, "payed"), ts=3),
+    ]))
+    p = plan_of(apply_changelog(state, chunk, "id"))
+    assert len(re.findall(r"^\(\d+\) Exchange", p, re.M)) == 1, p
+    assert re.search(r"hashpartitioning\(id#\d+", p), p
+
+
+def test_reference_pipeline_never_reads_its_sinks(spark, tmp_path, monkeypatch):
+    """Each sink commit of ``ReferencePipeline.run_batch`` is the recomputed
+    result written once: no batch scans a sink path, not even once every
+    sink exists."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from flink_streaming_etl_spark.streaming.reference_pipeline import ReferencePipeline
+    from tests.test_reference_pipeline import env, parse
+
+    scanned = []
+    for method in ("parquet", "load"):
+        real = getattr(DataFrameReader, method)
+
+        def spy(self, *paths, _real=real, **kw):
+            scanned.extend(str(p) for p in paths)
+            return _real(self, *paths, **kw)
+
+        monkeypatch.setattr(DataFrameReader, method, spy)
+
+    root = str(tmp_path / "sinks")
+    pipe = ReferencePipeline(spark, root)
+    t = "2020-07-30 10:08:22"
+    user = {"id": "0001", "name": "Jark", "age": 22, "ctime": t, "utime": t}
+    pipe.run_batch({"users": parse(spark, pipe, "users", [env("c", user, ts=1)])})
+    renamed = dict(user, name="Sabella")
+    pipe.run_batch({"users": parse(spark, pipe, "users", [env("u", renamed, user, ts=2)])})
+    assert all(pipe.sinks[name].exists() for name in pipe.sinks)
+    assert not [p for p in scanned if p.startswith(root)], scanned
