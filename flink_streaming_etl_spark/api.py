@@ -1195,9 +1195,9 @@ REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
     ),
     "cep_greedy_matches": (
         # AFTER MATCH SKIP PAST LAST ROW (the SQL:2016 default) on a
-        # self-overlapping pattern — greedy selection via pointer
-        # doubling over the candidate nxt-chain; oracle replays the
-        # same greedy as an aggregate-free recursive CTE
+        # self-overlapping pattern — greedy selection as one sorted walk
+        # over each key's candidates; oracle replays the same greedy as
+        # an aggregate-free recursive CTE over nxt pointers
         _q(cep.cep_greedy_matches, "events"),
         cep.cep_greedy_matches_sql(),
     ),
@@ -1210,7 +1210,7 @@ REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
     "cep_relaxed_matches": (
         # FlinkCEP followedBy (relaxed contiguity) with SKIP PAST LAST
         # ROW: next-of-type window maps + L-2 co-partitioned binding
-        # joins + as-of nxt pass + pointer-doubling closure
+        # joins + one sorted walk over each key's binding chains
         _q(cep.cep_relaxed_matches, "events"),
         cep.cep_relaxed_matches_sql(),
     ),

@@ -4,12 +4,12 @@
 the resulting ``LogicalRDD`` carries the ORIGIN plan's estimated
 statistics. Catalyst's size-only estimator defaults a join's
 ``sizeInBytes`` to the PRODUCT of its children's, so a loop that
-checkpoints a self-join every round (pointer doubling, connected
-components) doubles the DIGIT COUNT of the inherited ``sizeInBytes``
-BigInt each round — and a streaming accumulator that feeds one fold's
-checkpointed state into the next fold's joins compounds it ACROSS
-folds. The numbers stay mathematically finite but the driver ends up
-spending seconds per plan walk in BigInteger Toom-Cook multiplication
+checkpoints a self-join every round (connected components) doubles the
+DIGIT COUNT of the inherited ``sizeInBytes`` BigInt each round — and a
+streaming accumulator that feeds one fold's checkpointed state into the
+next fold's joins compounds it ACROSS folds. The numbers stay
+mathematically finite but the driver ends up spending seconds per plan
+walk in BigInteger Toom-Cook multiplication
 (observed: CEP fold time escalating 3 s → 30 s within six folds, with
 jstack showing ``SizeInBytesOnlyStatsPlanVisitor`` under
 ``BigInteger.multiply``).
@@ -46,11 +46,11 @@ def eager_checkpoint(df: DataFrame) -> DataFrame:
 
 
 # Measured note (round 13): an "amortized" variant — plain localCheckpoint
-# most rounds, a full eager reset every K rounds — was implemented for the
-# r12-verdict #5 suggestion and benchmarked on the cep.py pointer-doubling
-# closure at sf0.1. It was SLOWER than eager_checkpoint every round
-# (~4.7-5.7 s vs ~3.0-3.7 s steady-state): the win of eager_checkpoint is
-# not only bounded BigInt stats arithmetic but PLAN QUALITY — real
-# cache-measured sizes let Catalyst broadcast the pointer table in the
-# next round's self-join, which the inflated inherited estimates forbid.
-# Iterated relations should therefore always use eager_checkpoint.
+# most rounds, a full eager reset every K rounds — was benchmarked on an
+# iterated self-join at sf0.1 (the CEP pointer-doubling closure, since
+# deleted). It was SLOWER than eager_checkpoint every round (~4.7-5.7 s
+# vs ~3.0-3.7 s steady-state): the win of eager_checkpoint is not only
+# bounded BigInt stats arithmetic but PLAN QUALITY — real cache-measured
+# sizes let Catalyst broadcast the smaller side of the next round's
+# self-join, which the inflated inherited estimates forbid. Iterated
+# relations should therefore always use eager_checkpoint.

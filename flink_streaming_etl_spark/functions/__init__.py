@@ -24,26 +24,11 @@ def day_bucket(ts: Column | str) -> Column:
     return F.date_format(ts, "yyyy-MM-dd")
 
 
-# MySQL-style '%Y%m%d' variant (reference README.md:333), normalized to Java.
-def day_bucket_compact(ts: Column | str) -> Column:
-    return F.date_format(ts, "yyyyMMdd")
-
-
-# F3: PROCTIME() — processing-time column (flink-ddl.sql:10)
-def proctime() -> Column:
-    return F.current_timestamp()
-
-
 # F4-F7: the reference's salt expression `mod(hash_code(FLOOR(RAND(1)*1000)),256)`
 # (flink-ddl.sql:209). For testable determinism we salt on a hash of the row
 # key instead of RAND — same distribution property, reproducible.
 def salt_bucket(key: Column | str, buckets: int = 256) -> Column:
     return F.pmod(F.hash(key), F.lit(buckets))
-
-
-def random_salt_bucket(buckets: int = 256, seed: int = 1) -> Column:
-    """Literal translation of the reference's salt (kept for parity tests)."""
-    return F.pmod(F.hash(F.floor(F.rand(seed) * 1000)), F.lit(buckets))
 
 
 # F8: ROW(a,b,c) → struct
@@ -96,16 +81,6 @@ def words(text: Column | str) -> Column:
     return F.split(F.trim(text), r"\s+")
 
 
-def word_shingles(text: Column | str, k: int = 3) -> Column:
-    """k-word shingles as strings (array). Deterministic and
-    order-preserving; DuckDB twin built in operators/dedup.py."""
-    w = words(text)
-    return F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(w) - k, F.lit(0))),
-        lambda i: F.concat_ws(" ", F.slice(w, i + 1, k)),
-    )
-
-
 # ---------------------------------------------------------------------------
 # Embedding math — JVM-side, sequential fold (deterministic summation order)
 
@@ -115,18 +90,6 @@ def vec_dot(a: Column, b: Column) -> Column:
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
     )
-
-
-def vec_dot_fixed(a: Column, b: Column, dim: int) -> Column:
-    """Dot product with a statically known dimension, expanded to a flat
-    left-associated scalar expression — whole-stage-codegen'd, unlike the
-    interpreted HOF fold in :func:`vec_dot`. Same summation order, so the
-    result is bit-identical to the fold (and to DuckDB's list_dot_product).
-    """
-    acc: Column = F.lit(0.0)
-    for j in range(1, dim + 1):
-        acc = acc + F.element_at(a, j) * F.element_at(b, j)
-    return acc
 
 
 def vec_norm(a: Column) -> Column:

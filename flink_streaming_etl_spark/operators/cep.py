@@ -28,36 +28,31 @@ module re-expresses its core, Spark-first:
 * FlinkCEP's timed-out-partial-match side output →
   :func:`cep_timeout_report`.
 
-How this is Spark-shaped rather than a sequential NFA scan:
+How this is Spark-shaped:
 
 * Candidates are pure window algebra — ``L-1`` ``lead()`` columns over
   the per-key order, so candidate generation is ONE hash exchange on the
   key plus a per-partition sort (whole-stage codegen, no Python).
-* Greedy selection is the only genuinely sequential part. Because the
-  pattern is contiguous, a candidate starting at row ``rn`` consumes
-  rows ``[rn, rn+L)``, so the greedy successor of a taken candidate is
-  the first candidate with ``rn' >= rn+L`` — and since at most ``L-1``
-  later candidates can start inside the consumed span, that successor
-  is always among the next ``L`` candidates: ``nxt`` is computable with
-  ``L`` more leads, no join. Greedy selection is then the chain of
-  ``nxt`` pointers from each key's first candidate — a functional-graph
-  closure we compute with POINTER DOUBLING (the same discipline as
-  dedup.py's connected-components loop): round k holds the first 2^k
-  chain nodes and a 2^k-step pointer table, so a chain of M matches
-  needs ~log2(M) rounds of candidate-sized shuffles instead of an O(M)
-  per-key scan. At 100 TB the iterated relation is the CANDIDATE set
-  (pattern hits), orders of magnitude smaller than the event corpus,
-  and every round is key-partitioned joins — no driver data path.
+* Greedy selection is the only genuinely sequential part: FlinkCEP
+  walks each key's rows in order through that key's NFA, and
+  :func:`_greedy_walk` does the same over each key's pattern hits. The
+  key's nodes (candidates, or relaxed binding chains) are collected
+  into one array sorted by start row, and ONE Catalyst ``aggregate``
+  walks it JVM-side, taking a node whose start lies strictly after the
+  last taken node's end. The walk is a single hash exchange on the key
+  (none when the nodes already arrive key-partitioned from the
+  candidate window), no iteration and no Python; the per-key array
+  holds that key's pattern hits, not its events.
 
 The DuckDB oracles replay the same semantics: candidates via the same
 window algebra; greedy selection as an aggregate-free recursive CTE
 following the precomputed ``nxt`` pointer from each key's first
-candidate.
+candidate — an independent formulation of the same walk.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -171,124 +166,55 @@ def cep_pattern_matches(
     return _candidates(events, steps, within_hours).drop("rn")
 
 
-def _nxt_pointers(cand: DataFrame, L: int) -> DataFrame:
-    """Attach the greedy-successor pointer: the first candidate of the
-    same key with rn >= rn+L. Later candidates' rns are strictly
-    increasing, so the successor is the FIRST of the next L leads that
-    clears the consumed span — no join needed."""
-    cw = Window.partitionBy("user_id").orderBy("rn")
-    # ordered WHEN chain: the first (smallest-j) lead clearing the consumed
-    # span wins, and leads are strictly increasing in j, so that IS the min
-    nxt = None
-    for j in range(1, L + 1):
-        lead_j = F.lead("rn", j).over(cw)
-        cond = lead_j >= F.col("rn") + F.lit(L)
-        nxt = F.when(cond, lead_j) if nxt is None else nxt.when(cond, lead_j)
-    return cand.withColumn("nxt", nxt.otherwise(F.lit(None).cast("int")))
+#: the match columns every SKIP PAST LAST ROW operator returns per key
+_MATCH_COLS = ("start_event_id", "end_event_id", "start_us", "end_us")
 
 
-def _greedy_select(cand: DataFrame, L: int, max_iter: int = 40) -> DataFrame:
-    """AFTER MATCH SKIP PAST LAST ROW selection via pointer doubling."""
-    ptr = _nxt_pointers(cand, L).select("user_id", "rn", "nxt")
-    firsts = cand.groupBy("user_id").agg(F.min("rn").alias("rn"))
-    return _chain_closure(ptr, firsts, max_iter)
-
-
-def _chain_closure(
-    ptr: DataFrame, firsts: DataFrame, max_iter: int = 40
+def _greedy_walk(
+    nodes: DataFrame, start: Column, end: Column, payload: tuple[str, ...] | list[str]
 ) -> DataFrame:
-    """Nodes on the nxt-chain from each key's first node, via pointer
-    doubling: round k holds the first 2^k chain nodes per key and a
-    2^k-hop pointer table, so an M-node chain closes in ~log2(M) rounds
-    of chain-sized shuffles. Fixpoint when a round adds no rows
-    (monotone row count, exact). ``ptr``: (user_id, rn, nxt).
+    """AFTER MATCH SKIP PAST LAST ROW selection: (user_id, *payload) of
+    the nodes a left-to-right scan of each key takes.
 
-    The iterated relation is the candidate/pointer set — orders of
-    magnitude smaller than the event corpus — so the loop's shuffles
-    are sized to it (the neardup_clusters discipline). Width control is
-    an EXPLICIT ``repartition(width, user_id)`` on the iterated
-    relations — never a session-conf flip (r11 verdict: a concurrently
-    running query in the same session could observe a narrowed
-    ``spark.sql.shuffle.partitions``); the materialized per-round
-    relations are pinned at ``width`` partitions keyed on user_id, so
-    the loop's joins co-partition on the key and the dedup after the
-    union is the one width-sized exchange per round."""
-    spark = ptr.sparkSession
-    # r14 pre-loop fusion (guide §1.2): previously ptr paid FOUR
-    # materialization jobs before the first round (localCheckpoint, count,
-    # then eager_checkpoint's persist+count+checkpoint). One persist+count
-    # now sizes the loop width AND fills the cache, and the width-keyed
-    # checkpoint reads back from it — the LogicalRDD's origin plan is
-    # Repartition(InMemoryRelation), so it inherits the cache's REAL
-    # measured stats (the same eager_checkpoint contract, see ckpt.py):
-    # the loop SELF-joins ptr, and inherited estimate-product stats would
-    # double their digit count every round.
-    cached = ptr.persist()
-    session_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    width = max(8, min(session_width, cached.count() // 50_000))
-    ptr = cached.repartition(width, "user_id").localCheckpoint(eager=True)
-    cached.unpersist(blocking=False)
-    sel = firsts.repartition(width, "user_id").localCheckpoint(eager=True)
-    return _chain_closure_loop(ptr, sel, max_iter, width)
+    ``start``/``end`` are Columns giving the first and last row a node
+    consumes. The scan takes a node when its start lies strictly after
+    the end of the last node it took. A taken node whose end is NULL is
+    terminal — a pending start in the streaming relaxed kernel, which
+    only future rows can complete — so the scan stops there.
 
+    One ``groupBy`` on the key (a NULL key is its own group) collects
+    the key's nodes into an array sorted by start; one ``aggregate``
+    walks it JVM-side and ``inline`` unpacks the taken nodes with their
+    payload, so nothing is joined back."""
+    node = F.struct(
+        start.cast("long").alias("_s"),
+        end.cast("long").alias("_e"),
+        *[F.col(c) for c in payload],
+    )
+    walked = nodes.groupBy("user_id").agg(
+        F.array_sort(F.collect_list(node)).alias("_nodes")
+    )
+    zero = F.struct(
+        F.lit(None).cast("long").alias("last"),
+        F.lit(False).alias("stop"),
+        F.filter("_nodes", lambda x: F.lit(False)).alias("taken"),
+    )
 
-def _chain_closure_loop(
-    ptr: DataFrame, sel: DataFrame, max_iter: int, width: int
-) -> DataFrame:
-    from flink_streaming_etl_spark.ckpt import eager_checkpoint
-
-    n = sel.count()
-    for it in range(max_iter):
-        hop = (
-            _nsj(sel, ptr, ["user_id"], ["rn"])
-            .filter(F.col("nxt").isNotNull())
-            .select("user_id", F.col("nxt").alias("rn"))
-        )
-        # ONE explicit width-sized exchange; the dedup's clustering
-        # requirement is satisfied by the repartition's hash on user_id.
-        # r14 (guide §1.2): the fixpoint COUNT is the cache-materialization
-        # job (persist + count fills the cache), the checkpoint reads back
-        # from it, and on the convergence round — n2 == n with sel's rows
-        # monotone-growing, so new_sel is the SAME set — the checkpoint is
-        # skipped entirely and the previous round's relation returned.
-        new_sel = (
-            sel.unionByName(hop)
-            .repartition(width, "user_id")
-            .dropDuplicates()
-        )
-        cached = new_sel.persist()
-        n2 = cached.count()
-        if n2 == n:
-            cached.unpersist(blocking=False)
-            break
-        sel = cached.localCheckpoint(eager=True)
-        cached.unpersist(blocking=False)
-        n = n2
-        # double the pointer: 2^k -> 2^(k+1) hops. eager_checkpoint
-        # EVERY round is the measured optimum, not just BigInt hygiene:
-        # the r12-verdict #5 "reset every K rounds" amortization was
-        # implemented and benchmarked in r13 and came out SLOWER
-        # (greedy sf0.1 steady-state ~4.7-5.7 s periodic/plain vs
-        # ~3.0-3.7 s always-eager) — real cache-measured stats let
-        # Catalyst pick broadcast strategies for the next round's
-        # self-join, which plain-checkpoint's inflated inherited stats
-        # forbid. Plan quality pays for the extra materialization.
-        p2 = ptr.select(
-            F.col("user_id").alias("u2"),
-            F.col("rn").alias("r2"),
-            F.col("nxt").alias("nxt2"),
-        )
-        ptr = eager_checkpoint(
-            ptr.join(
-                p2,
-                F.col("user_id").eqNullSafe(F.col("u2"))
-                & (F.col("nxt") == F.col("r2")),
-                "left",
+    def take(acc, x):
+        # NULL last (nothing taken yet) compares NULL, so the first node
+        # is taken; a stopped walk keeps its accumulator
+        skip = acc["stop"] | (x["_s"] <= acc["last"])
+        return F.when(skip, acc).otherwise(
+            F.struct(
+                x["_e"].alias("last"),
+                x["_e"].isNull().alias("stop"),
+                F.concat(acc["taken"], F.array(x)).alias("taken"),
             )
-            .select("user_id", "rn", F.col("nxt2").alias("nxt"))
-            .repartition(width, "user_id")
         )
-    return sel.select("user_id", "rn")
+
+    return walked.select(
+        "user_id", F.inline(F.aggregate("_nodes", zero, take)["taken"])
+    ).select("user_id", *payload)
 
 
 def cep_greedy_matches(
@@ -300,8 +226,7 @@ def cep_greedy_matches(
     default): left-to-right greedy, non-overlapping matches."""
     L = len(steps)
     cand = _candidates(events, steps, within_hours)
-    sel = _greedy_select(cand, L)
-    return _nsj(sel, cand, ["user_id"], ["rn"]).drop("rn")
+    return _greedy_walk(cand, F.col("rn"), F.col("rn") + (L - 1), _MATCH_COLS)
 
 
 def cep_greedy_with_tails(
@@ -325,8 +250,9 @@ def cep_greedy_with_tails(
     within_us = within_hours * _US_PER_HOUR
     evs = _ordered(events).localCheckpoint(eager=True)
     cand = _candidates(events, steps, within_hours, evs=evs)
-    sel = _greedy_select(cand, L)
-    matches = _nsj(sel, cand, ["user_id"], ["rn"])
+    matches = _greedy_walk(
+        cand, F.col("rn"), F.col("rn") + (L - 1), ["rn", *_MATCH_COLS]
+    )
     consumed = matches.groupBy("user_id").agg(
         (F.max("rn") + F.lit(L - 1)).alias("last_rn")
     )
@@ -521,10 +447,10 @@ WHERE {prefix_where}
 #
 # Spark shape: ONE window pass computes, for every row, the next row
 # position of each step type (min-over-following-frame — no join); the
-# per-start binding chain is then L-2 co-partitioned equi-joins; the
-# greedy nxt pointer over valid starts is one union+window as-of pass
-# (the latest_order_asof recipe); selection reuses the pointer-doubling
-# chain closure. Everything is key-partitioned; no per-key scan.
+# per-start binding chain is then L-2 co-partitioned equi-joins; greedy
+# selection over the binding chains is the same per-key sorted walk as
+# the strict operators (_greedy_walk, a node consuming rows
+# start_rn..end_rn). Everything is key-partitioned.
 
 
 def _relaxed_bindings(
@@ -562,7 +488,7 @@ def _relaxed_bindings(
             .alias(f"n{j}")
             for j in range(1, L)
         ],
-    ).localCheckpoint(eager=True)
+    )
     m = base.filter(F.col("event_type") == steps[0]).select(
         "user_id",
         F.col("rn").alias("start_rn"),
@@ -609,53 +535,9 @@ def cep_relaxed_matches(
     LAST ROW: earliest valid start wins, matching resumes after its last
     bound row. Binding chains are monotone in the start position, so
     earliest start == earliest completion — the greedy scan is exactly
-    the nxt-chain from each key's first valid start."""
-    valid = _relaxed_bindings(events, steps, within_hours).localCheckpoint(
-        eager=True
-    )
-    sel = _relaxed_greedy_chain(valid)
-    return _nsj(sel, valid, ["user_id"], ["start_rn"]).select(
-        "user_id", "start_event_id", "end_event_id", "start_us", "end_us"
-    )
-
-
-def _relaxed_greedy_chain(nodes: DataFrame) -> DataFrame:
-    """Greedy-scan node chain: (user_id, start_rn) of the nodes the
-    sequential scan visits. ``nodes`` needs (user_id, start_rn, end_rn);
-    a node with NULL end_rn is a TERMINAL (a pending start in the
-    streaming kernel) — it has no successor, so the chain stops there.
-
-    nxt(p) = first node strictly after p's end row, found with ONE
-    union+window as-of pass (the latest_order_asof recipe: anchors sort
-    before probes at equal pos, so 'strictly after' holds), then the
-    pointer-doubling closure from each key's first node."""
-    anchors = nodes.select(
-        "user_id",
-        F.col("start_rn").alias("pos"),
-        F.lit(0).alias("tag"),
-        F.col("start_rn").alias("arn"),
-        F.lit(None).cast("int").alias("rn"),
-    )
-    probes = nodes.filter(F.col("end_rn").isNotNull()).select(
-        "user_id",
-        F.col("end_rn").alias("pos"),
-        F.lit(1).alias("tag"),
-        F.lit(None).cast("int").alias("arn"),
-        F.col("start_rn").alias("rn"),
-    )
-    aw = (
-        Window.partitionBy("user_id")
-        .orderBy("pos", "tag")
-        .rowsBetween(1, Window.unboundedFollowing)
-    )
-    ptr = (
-        anchors.unionByName(probes)
-        .withColumn("nxt", F.min("arn").over(aw))
-        .filter(F.col("tag") == 1)
-        .select("user_id", "rn", "nxt")
-    )
-    firsts = nodes.groupBy("user_id").agg(F.min("start_rn").alias("rn"))
-    return _chain_closure(ptr, firsts).withColumnRenamed("rn", "start_rn")
+    the per-key walk over valid starts in start order."""
+    valid = _relaxed_bindings(events, steps, within_hours)
+    return _greedy_walk(valid, F.col("start_rn"), F.col("end_rn"), _MATCH_COLS)
 
 
 def cep_relaxed_with_state(
@@ -679,11 +561,11 @@ def cep_relaxed_with_state(
     * DEAD — complete but over WITHIN (bindings final), or incomplete
       and expired (any future binding would push the span past WITHIN).
 
-    The sequential scan then IS the node chain over VALID ∪ PENDING
-    nodes where a pending node is terminal: valid chain nodes are
+    The sequential scan then IS the greedy walk over VALID ∪ PENDING
+    nodes where a pending node is terminal: valid nodes it takes are
     emitted, a pending node blocks everything after it (FlinkCEP holds
     the partial match open), and pending starts strictly inside an
-    emitted span are consumed — the as-of nxt jumps past them.
+    emitted span are consumed — the walk skips past them.
 
     Carry-over = all rows from the terminal pending node onward. Every
     such row is within WITHIN of the key's newest row (the pending start
@@ -715,11 +597,13 @@ def cep_relaxed_with_state(
         .withColumn("_valid", is_valid)
         .localCheckpoint(eager=True)
     )
-    chain = _relaxed_greedy_chain(nodes.select("user_id", "start_rn", "end_rn"))
-    on_chain = _nsj(chain, nodes, ["user_id"], ["start_rn"])
-    matches = on_chain.filter(F.col("_valid")).select(
-        "user_id", "start_event_id", "end_event_id", "start_us", "end_us"
+    on_chain = _greedy_walk(
+        nodes,
+        F.col("start_rn"),
+        F.col("end_rn"),
+        ["start_rn", *_MATCH_COLS, "_valid"],
     )
+    matches = on_chain.filter(F.col("_valid")).select("user_id", *_MATCH_COLS)
     cut = (
         on_chain.filter(~F.col("_valid"))
         .groupBy("user_id")

@@ -71,14 +71,6 @@ def shingle_rows_from_tokens(
     return rows.dropDuplicates(["doc_id", "shingle"]) if distinct else rows
 
 
-def _shingle_sets(documents: DataFrame) -> DataFrame:
-    """(doc_id, sh: array<string>) — per-doc distinct shingle set (order
-    irrelevant; consumers only take sizes/intersections)."""
-    return _word_shingle_rows(documents).groupBy("doc_id").agg(
-        F.collect_set("shingle").alias("sh")
-    )
-
-
 def _h32(elem: Column) -> Column:
     """md5-derived 32-bit int of a shingle (portable; see functions)."""
     return F.conv(F.substring(F.md5(elem), 1, 8), 16, 10).cast("long")

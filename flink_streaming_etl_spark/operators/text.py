@@ -1706,21 +1706,14 @@ def unigram_logprob_score(
         tokens = _lm_tokens(documents)
     tf = lm_tf_relation(tokens)
     counts = tf.groupBy("term").agg(F.sum("tf").alias("cnt"))
-    # r15 (guide §1.2 — fewer driver actions): the grand total used to be
-    # a collected scalar (one extra job + driver barrier per consumer:
-    # this score, perplexity_buckets, ccnet_pipeline, filter_stack, the
-    # quality reports). It is now a single-row broadcast aggregate cross-
-    # joined into the plan — same exact integer-sum → double arithmetic
-    # (empty corpus → coalesce to 1 keeps the plan valid; no rows score).
-    total = counts.agg(
-        F.coalesce(F.sum("cnt"), F.lit(1)).cast("double").alias("_total")
-    )
-    lp = F.log(F.col("cnt").cast("double") / F.col("_total"))
+    # the grand total is a collected scalar literal: a cross-joined
+    # single-row aggregate was measured slower and plans a nested-loop
+    # join (empty corpus → 1 keeps the division valid; no rows score)
+    total = float(counts.agg(F.sum("cnt")).first()[0] or 1)
+    lp = F.log(F.col("cnt").cast("double") / F.lit(total))
     # counts is vocabulary-bounded — pin it broadcast so the corpus-sized
-    # tf relation never shuffles for scoring (r7 verdict #4). The total
-    # rides INSIDE the broadcast build (vocab-sized crossJoin), so the
-    # corpus-side plan stays a single BroadcastHashJoin exactly as before.
-    scored = tf.join(F.broadcast(counts.crossJoin(total)), "term").select(
+    # tf relation never shuffles for scoring (r7 verdict #4)
+    scored = tf.join(F.broadcast(counts), "term").select(
         "doc_id", "tf", (F.col("tf") * lp).alias("wlp")
     )
     doc = scored.groupBy("doc_id").agg(
@@ -1938,23 +1931,18 @@ def source_kl_report(documents: DataFrame) -> DataFrame:
     # pass runs once and repeat calls share one bounded CacheManager entry.
     st = _source_term_counts(documents)
     t = st.groupBy("term").agg(F.sum("c_st").alias("c_t"))
-    # r15 (guide §1.2): corpus grand total folded into the plan as a
-    # single-row broadcast aggregate instead of a collected scalar — one
-    # job instead of two, identical exact-integer → double arithmetic.
-    total = t.agg(
-        F.coalesce(F.sum("c_t"), F.lit(1)).cast("double").alias("_total")
-    )
+    # corpus grand total as a collected scalar literal (exact integer
+    # sum → double), never a cross-joined single-row aggregate
+    total = float(t.agg(F.sum("c_t")).first()[0] or 1)
     joined = st.join(t, "term")
-    # per-source totals via a window-free second agg; the grand total
-    # rides the (sources-bounded) s_tot side so the corpus-sized join
-    # shape is unchanged
-    s_tot = st.groupBy("source").agg(F.sum("c_st").alias("t_s")).crossJoin(total)
+    # per-source totals via a window-free second agg
+    s_tot = st.groupBy("source").agg(F.sum("c_st").alias("t_s"))
     scored = joined.join(s_tot, "source").select(
         "source",
         "c_st",
         (
             (F.col("c_st") / F.col("t_s"))
-            * F.log((F.col("c_st") / F.col("t_s")) / (F.col("c_t") / F.col("_total")))
+            * F.log((F.col("c_st") / F.col("t_s")) / (F.col("c_t") / F.lit(total)))
         ).alias("term_kl"),
     )
     return scored.groupBy("source").agg(
@@ -3427,9 +3415,8 @@ def pmi_top_pairs(
     )
     docterm = tf.join(F.broadcast(top), "term").select("doc_id", "term")
     dfr = docterm.groupBy("term").agg(F.count(F.lit(1)).alias("df_t"))
-    # r15 (guide §1.2): the corpus doc count folded into the plan as a
-    # single-row broadcast aggregate instead of a driver .count() action.
-    nd = documents.agg(F.count(F.lit(1)).cast("double").alias("_nd"))
+    # the corpus doc count is a collected scalar literal
+    nd = float(documents.count())
     a = docterm.select("doc_id", F.col("term").alias("t1"))
     b = docterm.select("doc_id", F.col("term").alias("t2"))
     pairs = (
@@ -3445,18 +3432,14 @@ def pmi_top_pairs(
             "t1",
         )
         .join(
-            F.broadcast(
-                dfr.select(
-                    F.col("term").alias("t2"), F.col("df_t").alias("df2")
-                ).crossJoin(nd)
-            ),
+            F.broadcast(dfr.select(F.col("term").alias("t2"), F.col("df_t").alias("df2"))),
             "t2",
         )
     )
     pmi = F.bround(
         F.log(
             F.col("df12").cast("double")
-            * F.col("_nd")
+            * F.lit(nd)
             / (F.col("df1") * F.col("df2"))
         ),
         4,

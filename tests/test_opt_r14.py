@@ -120,16 +120,28 @@ def test_substring_shingles_memoized_per_session(spark, tables):
     clear_operator_caches()
 
 
-def test_chain_closure_loop_still_closes_chains(spark):
-    """r14 pre-loop fusion + convergence-skip: the pointer-doubling closure
-    must still return exactly the nodes on the nxt-chain from each first."""
-    from flink_streaming_etl_spark.operators.cep import _chain_closure
+def test_greedy_walk_still_closes_chains(spark):
+    """The sorted per-key walk must return exactly the greedy chain from
+    each key's first node: a node starting inside the last taken span is
+    skipped, a taken node with a NULL end stops the walk, and a NULL key
+    is a group of its own. Rows arrive out of order."""
+    from flink_streaming_etl_spark.operators.cep import _greedy_walk
 
-    # user 1: chain 1 -> 2 -> 3 -> 4 (first = 1); user 2: 10 -> 11 (first = 10)
-    ptr = spark.createDataFrame(
-        [(1, 1, 2), (1, 2, 3), (1, 3, 4), (1, 4, None), (2, 10, 11), (2, 11, None)],
-        "user_id long, rn long, nxt long",
+    # (user_id, node id, start, end)
+    # user 1: chain 1 -> 2 -> 3 -> 4; nodes 5 and 6 start inside a taken span
+    # user 2: chain 10 -> 11; 11 is pending (NULL end), so 12 is never taken
+    # NULL key: chain 20 -> 22; 21 starts inside 20's span
+    nodes = spark.createDataFrame(
+        [
+            (1, 4, 6, 7), (2, 12, 5, 6), (1, 1, 0, 2), (None, 22, 3, 4),
+            (1, 5, 2, 3), (2, 11, 2, None), (1, 2, 3, 4), (None, 20, 0, 2),
+            (1, 6, 4, 9), (2, 10, 0, 1), (1, 3, 5, 5), (None, 21, 1, 1),
+        ],
+        "user_id long, rn long, s long, e long",
     )
-    firsts = spark.createDataFrame([(1, 1), (2, 10)], "user_id long, rn long")
-    got = {(r["user_id"], r["rn"]) for r in _chain_closure(ptr, firsts).collect()}
-    assert got == {(1, 1), (1, 2), (1, 3), (1, 4), (2, 10), (2, 11)}
+    walked = _greedy_walk(nodes, F.col("s"), F.col("e"), ["rn"])
+    assert walked.columns == ["user_id", "rn"]
+    got = {(r["user_id"], r["rn"]) for r in walked.collect()}
+    assert got == {
+        (1, 1), (1, 2), (1, 3), (1, 4), (2, 10), (2, 11), (None, 20), (None, 22)
+    }

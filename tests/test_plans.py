@@ -700,3 +700,27 @@ def test_reference_pipeline_never_reads_its_sinks(spark, tmp_path, monkeypatch):
     pipe.run_batch({"users": parse(spark, pipe, "users", [env("u", renamed, user, ts=2)])})
     assert all(pipe.sinks[name].exists() for name in pipe.sinks)
     assert not [p for p in scanned if p.startswith(root)], scanned
+
+
+def test_cep_greedy_selection_is_one_sorted_pass(spark):
+    """SKIP PAST LAST ROW selection is one sorted walk per key: no
+    checkpointed or cached relation and no Python worker in the plans,
+    and a noop write runs a handful of Spark jobs (the pointer-doubling
+    closure it replaced ran about fifty)."""
+    from flink_streaming_etl_spark.operators import cep
+
+    events = _tables(spark)["events"]
+    sc = spark.sparkContext
+    for fn, max_jobs in ((cep.cep_greedy_matches, 3), (cep.cep_relaxed_matches, 8)):
+        df = fn(events)
+        group = f"one-sorted-pass-{fn.__name__}"
+        sc.setJobGroup(group, group)
+        try:
+            df.write.format("noop").mode("overwrite").save()
+        finally:
+            sc.setJobGroup(f"{group}-done", "")
+        p = plan_text(df, "extended")
+        for node in ("LogicalRDD", "ExistingRDD", "InMemoryRelation", "EvalPython"):
+            assert node not in p, f"{fn.__name__}: {node}\n{p}"
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert n_jobs <= max_jobs, f"{fn.__name__}: {n_jobs} jobs"
