@@ -40,21 +40,7 @@ from pyspark.sql import DataFrame
 #: DataFrame (ADVICE r7).
 _FAMILIES: dict[str, dict[tuple[int, int], tuple[weakref.ref, DataFrame]]] = {}
 
-#: clear callbacks for operator modules with their own cache shapes
-#: (e.g. dedup's id()-keyed pair/signature caches) — invoked by
-#: clear_operator_caches so EVERY memoized relation resets together.
-#: Without this, spark.catalog.clearCache() would unpersist the data
-#: while the module dict kept handing out the now-uncached DataFrame —
-#: consumers would silently recompute the expensive relation per use.
-_EXTERNAL_CLEARERS: list = []
-
 DEFAULT_MAX_ENTRIES = 4
-
-
-def register_clearer(fn):
-    """Register (decorator-style) a module's cache-clear callback."""
-    _EXTERNAL_CLEARERS.append(fn)
-    return fn
 
 
 def memo_persist(
@@ -108,11 +94,6 @@ def clear_operator_caches() -> None:
             except Exception:
                 pass
         cache.clear()
-    for fn in _EXTERNAL_CLEARERS:
-        try:
-            fn()
-        except Exception:
-            pass
 
 
 def cache_stats() -> dict[str, int]:

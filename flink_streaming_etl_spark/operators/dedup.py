@@ -26,6 +26,7 @@ from flink_streaming_etl_spark.functions import (
     q6,
     q6_sql,
 )
+from flink_streaming_etl_spark.operators._cache import memo_persist
 
 # ---------------------------------------------------------------------------
 # Shared shingle plumbing
@@ -116,28 +117,19 @@ FROM documents GROUP BY 1
 # Exact n-gram Jaccard pairs (the ground-truth near-dup relation).
 
 
-#: id(documents) → (strong ref, persisted per-doc sorted shingle-hash
-#: arrays). Shared by the GEMM kernel (ngram_jaccard_pairs) and the LSH
-#: verification stage (minhash_lsh_pairs): both need the same DISTINCT
-#: 60-bit-hash set per document, so a corpus materializes it once.
-_ARRAYS_CACHE: dict[int, tuple[DataFrame, DataFrame]] = {}
-
-
 def _hash_array_rel(documents: DataFrame) -> DataFrame:
     """(doc_id, hashes): sorted DISTINCT 60-bit md5-prefix shingle hashes
     per document — the set-representation every exact-Jaccard consumer
     intersects. collect_set dedups ≡ DISTINCT string shingles (collision
-    odds ~V²/2⁶¹); the distinct rides the groupBy shuffle free."""
-    key = id(documents)
-    if key in _ARRAYS_CACHE:
-        return _ARRAYS_CACHE[key][1]
+    odds ~V²/2⁶¹); the distinct rides the groupBy shuffle free. Memo-
+    persisted: the exact-Jaccard kernels of one corpus share it."""
     rows = _word_shingle_rows(documents).withColumn(
         "h", F.conv(F.substring(F.md5("shingle"), 1, 15), 16, 10).cast("long")
     )
-    out = rows.groupBy("doc_id").agg(F.array_sort(F.collect_set("h")).alias("hashes"))
-    cached = out.persist()
-    _ARRAYS_CACHE[key] = (documents, cached)
-    return cached
+    return memo_persist(
+        "hash_arrays",
+        rows.groupBy("doc_id").agg(F.array_sort(F.collect_set("h")).alias("hashes")),
+    )
 
 
 def ngram_jaccard_pairs(
@@ -353,10 +345,11 @@ def minhash_lsh_pairs(
     bucket (navigation chrome, license headers) turns the self-join
     quadratic. Capping drops those buckets entirely — their members still
     pair through their other, non-boilerplate bands, which is exactly the
-    LSH recall argument. Off by default (small-SF parity is exact)."""
-    key = (id(documents), threshold, max_bucket)
-    if key in _PAIRS_CACHE:
-        return _PAIRS_CACHE[key][1]
+    LSH recall argument. Off by default (small-SF parity is exact).
+
+    The verified pair relation is memo-persisted: the dedup DECISION
+    queries (drop list, apply, clustering) all consume it, so a corpus
+    mines its pairs once."""
     # r14 fused signature+set relation (guide §1.2/§2.3): signatures and
     # the exact-verify hash sets previously ran as TWO relations, each
     # re-tokenizing and re-hashing every shingle occurrence (two md5
@@ -372,8 +365,6 @@ def minhash_lsh_pairs(
     rows = _word_shingle_rows(documents).withColumn(
         "h60", F.conv(F.substring(F.md5("shingle"), 1, 15), 16, 10).cast("long")
     )
-    from flink_streaming_etl_spark.operators._cache import memo_persist
-
     fused = memo_persist(
         "lsh_sig_sets",
         rows.groupBy("doc_id").agg(
@@ -426,17 +417,7 @@ def minhash_lsh_pairs(
     # (measured 5× on consumer queries). Mining stages above keep full
     # parallelism; only the (tiny) result crosses this one extra exchange.
     n_cache = max(4, documents.sparkSession.sparkContext.defaultParallelism // 8)
-    cached = out.repartition(n_cache).persist()
-    _PAIRS_CACHE[key] = (documents, cached)
-    return cached
-
-
-#: (id(documents), threshold) → (strong ref keeping the id valid, persisted
-#: pair relation). The dedup DECISION queries (drop list, apply, clustering)
-#: all consume this relation — a real pipeline materializes it once per
-#: corpus rather than re-mining pairs per consumer. load_tables memoizes
-#: the corpus DataFrame, so the id is a stable corpus identity.
-_PAIRS_CACHE: dict[tuple[int, float], tuple[DataFrame, DataFrame]] = {}
+    return memo_persist("lsh_pairs", out.repartition(n_cache))
 
 
 def minhash_lsh_pairs_sql(threshold: float = 0.05) -> str:
@@ -481,17 +462,10 @@ WHERE floor((common / (na.n + nb.n - common)) * 1000000.0) / 1000000.0 >= {thres
 SIMHASH_BITS = 32
 
 
-#: (id(documents)) → (strong ref, persisted signatures); same
-#: materialize-once rationale as _PAIRS_CACHE (simhash_pairs re-consumes
-#: the signature relation).
-_SIMHASH_CACHE: dict[int, tuple[DataFrame, DataFrame]] = {}
-
-
 def simhash(documents: DataFrame) -> DataFrame:
     """One explode + one groupBy: 32 codegen'd conditional-sum aggregates
-    (bit votes), then the signature is assembled from the vote columns."""
-    if id(documents) in _SIMHASH_CACHE:
-        return _SIMHASH_CACHE[id(documents)][1]
+    (bit votes), then the signature is assembled from the vote columns.
+    Memo-persisted: simhash_pairs re-consumes the signature relation."""
     rows = _shingle_rows(documents, distinct=True)
     votes = [
         F.sum(
@@ -506,9 +480,7 @@ def simhash(documents: DataFrame) -> DataFrame:
         sig = sig + F.when(
             F.col(f"v{b}") >= 0, F.shiftleft(F.lit(1).cast("long"), b)
         ).otherwise(F.lit(0))
-    out = g.select("doc_id", sig.alias("simhash32"))
-    _SIMHASH_CACHE[id(documents)] = (documents, out.persist())
-    return out
+    return memo_persist("simhash", g.select("doc_id", sig.alias("simhash32")))
 
 
 def simhash_sql() -> str:
@@ -1268,27 +1240,6 @@ SELECT CAST(n.n_docs AS BIGINT) AS n_docs,
        floor((n.n_docs - (SELECT COUNT(*) FROM drops))::DOUBLE / n.n_docs * 1000000.0) / 1000000.0 AS survivor_rate
 FROM n, exact
 """
-
-
-# ---------------------------------------------------------------------------
-# Cache-reset hook: this module's id()-keyed memoized relations (sorted
-# shingle arrays, verified LSH pairs, simhash signatures) must reset
-# together with the shared memo-persist families — otherwise a bench/
-# session clearCache() leaves the dicts handing out now-uncached
-# DataFrames and every consumer silently re-mines the pair relation.
-
-from flink_streaming_etl_spark.operators._cache import register_clearer
-
-
-@register_clearer
-def _clear_dedup_caches() -> None:
-    for cache in (_ARRAYS_CACHE, _PAIRS_CACHE, _SIMHASH_CACHE):
-        for _ref, df in cache.values():
-            try:
-                df.unpersist(blocking=False)
-            except Exception:
-                pass
-        cache.clear()
 
 
 # ---------------------------------------------------------------------------

@@ -71,11 +71,33 @@ def _remove_file(path: str) -> None:
         os.remove(path)
 
 
+def _host_cpus() -> int:
+    """Cores this process may run on."""
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
+def _host_memory_mb() -> int:
+    """Physical memory of the host (``MemTotal`` on Linux)."""
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+
+
 def _cpus() -> int:
+    """``SPARK_GRAFT_CPUS``, else the host's usable cores."""
     try:
-        return max(1, int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    except ValueError:
-        return 32
+        return max(1, int(os.environ["SPARK_GRAFT_CPUS"]))
+    except (KeyError, ValueError):
+        return _host_cpus()
+
+
+def _driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else min(32g, 60% of host memory): the
+    local-mode heap holds every executor's data, and a heap sized past
+    physical memory gets the JVM killed instead of spilling."""
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM") or (
+        f"{min(32 * 1024, int(_host_memory_mb() * 0.6))}m"
+    )
 
 
 def get_spark(
@@ -95,7 +117,7 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.driver.maxResultSize", "4g")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -32,13 +32,16 @@ every changelog prefix, including retraction of a mid-list element.
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from flink_streaming_etl_spark.sources.cdc import apply_changelog
 from flink_streaming_etl_spark.streaming.incremental import changelog_deltas
+from flink_streaming_etl_spark.streaming.retention import (
+    GroupRetention,
+    evict,
+    group_match,
+)
 
 
 class IncrementalCollect:
@@ -73,10 +76,6 @@ class IncrementalCollect:
         #: idle-state retention (T5, streaming/retention.py) — see topk.py
         self._retention = None
         if retention_batches is not None:
-            from flink_streaming_etl_spark.streaming.retention import (
-                GroupRetention,
-            )
-
             self._retention = GroupRetention(self.group_cols, retention_batches)
         self._store = None
         if state_dir is not None:
@@ -121,12 +120,6 @@ class IncrementalCollect:
         img = changelog_deltas(chunk, None).select("img.*")
         return img.select(*self.group_cols).distinct()
 
-    def _group_match(self, left: DataFrame, right: DataFrame):
-        return reduce(
-            lambda a, b: a & b,
-            [left[c].eqNullSafe(right[c]) for c in self.group_cols],
-        )
-
     def apply(self, chunk: DataFrame, batch_id: int | None = None) -> DataFrame | None:
         """Fold one micro-batch; return the refreshed lists of the
         touched groups (None on replay). A touched group left with no
@@ -146,21 +139,23 @@ class IncrementalCollect:
             eager=True
         )
         slice_ = new_state.join(
-            F.broadcast(touched), self._group_match(new_state, touched), "semi"
+            F.broadcast(touched),
+            group_match(new_state, touched, self.group_cols),
+            "semi",
         )
         refreshed = self._aggregate(slice_).localCheckpoint(eager=True)
         if self.agg is None:
             new_agg = refreshed
         else:
             kept = self.agg.join(
-                F.broadcast(touched), self._group_match(self.agg, touched), "anti"
+                F.broadcast(touched),
+                group_match(self.agg, touched, self.group_cols),
+                "anti",
             )
             new_agg = kept.unionByName(refreshed).localCheckpoint(eager=True)
         idle_groups = None
         evicted_pks = None
         if self._retention is not None:
-            from flink_streaming_etl_spark.streaming.retention import evict
-
             idle = self._retention.tick(touched)
             if idle is not None:
                 # capture the evicted rows' PKs BEFORE eviction: their
@@ -170,7 +165,7 @@ class IncrementalCollect:
                 evicted_pks = (
                     new_state.join(
                         F.broadcast(idle),
-                        self._group_match(new_state, idle),
+                        group_match(new_state, idle, self.group_cols),
                         "semi",
                     )
                     .select(self.pk)

@@ -33,8 +33,9 @@ State, fully distributed: ``vec_rel`` (vec_id, v, norm, last_seen) —
 the kept-corpus index; ``kept_rel`` (vec_id, kept, owner) — the
 decision log. Idle retention (T5) ages kept vectors that go unmatched
 for ``retention_batches`` folds out of the index (decisions stay —
-history, not index). Durable state rides BucketedState; replays are
-idempotent by batch id with the T6 fold-then-commit ordering.
+history, not index). Durability, replay guard and fold-then-commit
+(T6) follow :class:`~flink_streaming_etl_spark.streaming.state_store
+.DurableFold`.
 """
 
 from __future__ import annotations
@@ -56,6 +57,7 @@ from flink_streaming_etl_spark.operators.similarity import (
     _as_double,
     _bucket_expr_spark,
 )
+from flink_streaming_etl_spark.streaming.state_store import DurableFold
 
 _VEC_SCHEMA = StructType(
     [
@@ -75,11 +77,14 @@ _KEPT_SCHEMA = StructType(
 )
 
 
-class EmbeddingNearDupAccumulator:
+class EmbeddingNearDupAccumulator(DurableFold):
     """Incremental new-vs-corpus embedding-cosine dedup with
     distributed state."""
 
-    _N_BUCKETS = 64
+    _STATE = {
+        "vec": (_VEC_SCHEMA, ["vec_id"]),
+        "kept": (_KEPT_SCHEMA, ["vec_id"]),
+    }
 
     def __init__(
         self,
@@ -92,76 +97,7 @@ class EmbeddingNearDupAccumulator:
         self.threshold = float(threshold)
         self.n_planes = n_planes
         self.retention_batches = retention_batches
-        self.vec_rel: DataFrame | None = None
-        self.kept_rel: DataFrame | None = None
-        self.n_batches = 0
-        self.last_batch_id: int | None = None
-        self._save_seq = 0
-        self.store = None
-        self._restored = True
-        if store_root is not None:
-            from flink_streaming_etl_spark.streaming.state_store import (
-                AccumulatorStateStore,
-            )
-
-            self.store = AccumulatorStateStore(store_root)
-            self._restored = False
-            if spark is not None:
-                self._restore(spark)
-
-    # -- durability -------------------------------------------------------
-
-    def _restore(self, spark: SparkSession) -> None:
-        self._restored = True
-        loaded = self.store.load(spark)
-        if loaded is None:
-            return
-        bid, rels, extra = loaded
-        self._save_seq = bid
-        self.last_batch_id = extra.get("last_batch_id", bid)
-        self.n_batches = int(extra.get("n_batches", 0))
-        if "vec" in rels:
-            self.vec_rel = rels["vec"].localCheckpoint(eager=True)
-        if "kept" in rels:
-            self.kept_rel = rels["kept"].localCheckpoint(eager=True)
-
-    def _save(
-        self,
-        spark: SparkSession,
-        last_bid: int | None,
-        vec_rel: DataFrame | None,
-        kept_rel: DataFrame | None,
-        n_batches: int,
-        touched: DataFrame | None,
-    ) -> None:
-        if self.store is None:
-            return
-        from flink_streaming_etl_spark.streaming.state_store import (
-            BucketedState,
-        )
-
-        empty = lambda s: spark.createDataFrame([], s)  # noqa: E731
-        seq = self._save_seq + 1
-        self.store.save(
-            seq,
-            {},
-            extra={"last_batch_id": last_bid, "n_batches": n_batches},
-            bucketed={
-                "vec": BucketedState(
-                    vec_rel if vec_rel is not None else empty(_VEC_SCHEMA),
-                    ["vec_id"],
-                    n_buckets=self._N_BUCKETS,
-                    touched=touched,
-                ),
-                "kept": BucketedState(
-                    kept_rel if kept_rel is not None else empty(_KEPT_SCHEMA),
-                    ["vec_id"],
-                    n_buckets=self._N_BUCKETS,
-                    touched=touched,
-                ),
-            },
-        )
-        self._save_seq = seq
+        super().__init__(store_root, spark)
 
     # -- streaming side ---------------------------------------------------
 
@@ -178,11 +114,8 @@ class EmbeddingNearDupAccumulator:
         index (exact or bucket-prefiltered), decide keep/drop, extend
         the index with the kept vectors — all relation-side."""
         spark = batch_embeddings.sparkSession
-        if not self._restored:
-            self._restore(spark)
-        if batch_id is not None:
-            if self.last_batch_id is not None and batch_id <= self.last_batch_id:
-                return  # replay of a COMMITTED batch — already folded
+        if self._replayed(spark, batch_id):
+            return
         n = self.n_batches + 1
         width = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
@@ -293,27 +226,16 @@ class EmbeddingNearDupAccumulator:
                 new_vec = new_vec.filter(F.col("last_seen") > horizon)
         new_vec = eager_checkpoint(new_vec.coalesce(width))
 
-        if self.store is not None and batch_id is not None:
-            touched = batch_ids
-            if touched_owners is not None:
-                touched = touched.unionByName(touched_owners)
-            if evicted is not None:
-                touched = touched.unionByName(evicted)
-            self._save(
-                spark, batch_id, new_vec, new_kept_rel, n, touched=touched
-            )
-        self.vec_rel = new_vec
-        self.kept_rel = new_kept_rel
-        self.n_batches = n
-        if batch_id is not None:
-            self.last_batch_id = int(batch_id)
-
-    def attach(self, stream_embeddings: DataFrame, **start_kwargs):
-        """Wire onto a streaming DataFrame via foreachBatch and start."""
-        return (
-            stream_embeddings.writeStream.outputMode("append")
-            .foreachBatch(lambda batch, bid: self.add_batch(batch, bid))
-            .start(**start_kwargs)
+        touched = batch_ids
+        if touched_owners is not None:
+            touched = touched.unionByName(touched_owners)
+        if evicted is not None:
+            touched = touched.unionByName(evicted)
+        self._commit(
+            spark,
+            batch_id,
+            {"vec": new_vec, "kept": new_kept_rel},
+            {"vec": touched, "kept": touched},
         )
 
     # -- query side -------------------------------------------------------

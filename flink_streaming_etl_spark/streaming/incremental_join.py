@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 
 from flink_streaming_etl_spark.sources.cdc import apply_changelog
 from flink_streaming_etl_spark.streaming.incremental import changelog_deltas
+from flink_streaming_etl_spark.streaming.retention import group_match
 
 
 def _signed_images(chunk: DataFrame) -> DataFrame:
@@ -776,13 +777,6 @@ class IncrementalJoinCollect:
             F.count(F.lit(1)).alias("n_items"),
         )
 
-    def _group_match(self, left: DataFrame, right: DataFrame):
-        cond = None
-        for c in self.group_cols:
-            e = left[c].eqNullSafe(right[c])
-            cond = e if cond is None else cond & e
-        return cond
-
     def apply(
         self,
         left_chunk: DataFrame | None = None,
@@ -815,7 +809,9 @@ class IncrementalJoinCollect:
             # multiset-expanded output of the NEW (uncommitted) join state
             result = self.join._expand(new_join)
             slice_ = result.join(
-                F.broadcast(touched), self._group_match(result, touched), "semi"
+                F.broadcast(touched),
+                group_match(result, touched, self.group_cols),
+                "semi",
             )
             refreshed = self._aggregate(slice_).localCheckpoint(eager=True)
             if self.agg is None:
@@ -823,7 +819,7 @@ class IncrementalJoinCollect:
             else:
                 kept = self.agg.join(
                     F.broadcast(touched),
-                    self._group_match(self.agg, touched),
+                    group_match(self.agg, touched, self.group_cols),
                     "anti",
                 )
                 new_agg = kept.unionByName(refreshed).localCheckpoint(eager=True)

@@ -26,15 +26,12 @@ last 100-TB bottleneck class):
 - **idle retention** (T5): owner rows whose chunk hash goes untouched
   for ``retention_batches`` folds are dropped relation-side via the
   carried ``last_seen`` fold-stamp.
-- durable state rides ``BucketedState`` when ``store_root`` is given
+- durability, replay guard and fold-then-commit (T6) follow
+  :class:`~flink_streaming_etl_spark.streaming.state_store.DurableFold`
   (buckets rewritten ∝ chashes/pairs the batch touched).
 
 Driver transfer per fold: O(1) scalars (checkpoint counts). Pinned by
 the round-13 collect-spy test.
-
-Replays are idempotent by batch id; fold-then-commit (T6): all state
-folds build fresh relations, ``self.*`` and ``last_batch_id`` commit
-only after every Spark phase and the durable save succeed.
 
 Equality contract (pytest ``test_streaming_media_chunk_handover``): fed
 the corpus in media_id-ordered micro-batches with no hot chunks, the
@@ -65,6 +62,7 @@ from flink_streaming_etl_spark.operators.multimodal import (
     MEDIA_CHUNK_OWNER_CAP,
     documents_as_media,
 )
+from flink_streaming_etl_spark.streaming.state_store import DurableFold
 
 _OWNER_SCHEMA = StructType(
     [
@@ -83,10 +81,17 @@ _PAIR_SCHEMA = StructType(
 )
 
 
-class MediaChunkDedupAccumulator:
+class MediaChunkDedupAccumulator(DurableFold):
     """Incremental chunk-level media dedup with distributed state."""
 
-    _N_BUCKETS = 64
+    #: ``owner_rel``: (chash, media_id, last_seen) — DISTRIBUTED,
+    #: ≤ owner_cap + 1 rows per chash (the overflow row marks the chunk
+    #: hot); ``pairs_rel``: (a_id, b_id, shared_chunks), a_id < b_id —
+    #: DISTRIBUTED
+    _STATE = {
+        "owner": (_OWNER_SCHEMA, ["chash"]),
+        "pairs": (_PAIR_SCHEMA, ["a_id", "b_id"]),
+    }
 
     def __init__(
         self,
@@ -101,83 +106,7 @@ class MediaChunkDedupAccumulator:
         self.min_shared = min_shared
         self.owner_cap = owner_cap
         self.retention_batches = retention_batches
-        #: (chash, media_id, last_seen) — DISTRIBUTED, ≤ owner_cap + 1
-        #: rows per chash (the overflow row marks the chunk hot)
-        self.owner_rel: DataFrame | None = None
-        #: (a_id, b_id, shared_chunks), a_id < b_id — DISTRIBUTED
-        self.pairs_rel: DataFrame | None = None
-        self.n_batches = 0
-        self.last_batch_id: int | None = None
-        self._save_seq = 0
-        self.store = None
-        self._restored = True
-        if store_root is not None:
-            from flink_streaming_etl_spark.streaming.state_store import (
-                AccumulatorStateStore,
-            )
-
-            self.store = AccumulatorStateStore(store_root)
-            self._restored = False
-            if spark is not None:
-                self._restore(spark)
-
-    # -- durability -------------------------------------------------------
-
-    def _restore(self, spark: SparkSession) -> None:
-        self._restored = True
-        loaded = self.store.load(spark)
-        if loaded is None:
-            return
-        bid, rels, extra = loaded
-        self._save_seq = bid
-        self.last_batch_id = extra.get("last_batch_id", bid)
-        self.n_batches = int(extra.get("n_batches", 0))
-        if "owner" in rels:
-            self.owner_rel = rels["owner"].localCheckpoint(eager=True)
-        if "pairs" in rels:
-            self.pairs_rel = rels["pairs"].localCheckpoint(eager=True)
-
-    def _save(
-        self,
-        spark: SparkSession,
-        last_bid: int | None,
-        owner_rel: DataFrame | None,
-        pairs_rel: DataFrame | None,
-        n_batches: int,
-        touched_chashes: DataFrame | None,
-        touched_pairs: DataFrame | None,
-    ) -> None:
-        if self.store is None:
-            return
-        from flink_streaming_etl_spark.streaming.state_store import (
-            BucketedState,
-        )
-
-        seq = self._save_seq + 1
-        self.store.save(
-            seq,
-            {},
-            extra={"last_batch_id": last_bid, "n_batches": n_batches},
-            bucketed={
-                "owner": BucketedState(
-                    owner_rel
-                    if owner_rel is not None
-                    else spark.createDataFrame([], _OWNER_SCHEMA),
-                    ["chash"],
-                    n_buckets=self._N_BUCKETS,
-                    touched=touched_chashes,
-                ),
-                "pairs": BucketedState(
-                    pairs_rel
-                    if pairs_rel is not None
-                    else spark.createDataFrame([], _PAIR_SCHEMA),
-                    ["a_id", "b_id"],
-                    n_buckets=self._N_BUCKETS,
-                    touched=touched_pairs,
-                ),
-            },
-        )
-        self._save_seq = seq
+        super().__init__(store_root, spark)
 
     # -- streaming side -----------------------------------------------------
 
@@ -217,13 +146,8 @@ class MediaChunkDedupAccumulator:
         shared chunks against every previously-seen owner (and earlier
         media of the same batch, in media_id order) — all relation-side."""
         spark = batch_documents.sparkSession
-        if not self._restored:
-            self._restore(spark)
-        # replay guard CHECKED here, state/batch id COMMITTED at the end
-        # (T6 fold-then-commit)
-        if batch_id is not None:
-            if self.last_batch_id is not None and batch_id <= self.last_batch_id:
-                return  # replay of a COMMITTED batch — already folded
+        if self._replayed(spark, batch_id):
+            return
         n = self.n_batches + 1
         width = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
@@ -337,25 +261,11 @@ class MediaChunkDedupAccumulator:
                 new_owner = new_owner.filter(F.col("last_seen") > horizon)
         new_owner = eager_checkpoint(new_owner.coalesce(width))
 
-        # durable save from the NEW state, then commit memory + batch id
-        if self.store is not None and batch_id is not None:
-            self._save(
-                spark, batch_id, new_owner, new_pairs_rel, n,
-                touched_chashes=touched_chashes,
-                touched_pairs=new_pairs.select("a_id", "b_id"),
-            )
-        self.owner_rel = new_owner
-        self.pairs_rel = new_pairs_rel
-        self.n_batches = n
-        if batch_id is not None:
-            self.last_batch_id = int(batch_id)
-
-    def attach(self, stream_documents: DataFrame, **start_kwargs):
-        """Wire onto a streaming DataFrame via foreachBatch and start."""
-        return (
-            stream_documents.writeStream.outputMode("append")
-            .foreachBatch(lambda batch, bid: self.add_batch(batch, bid))
-            .start(**start_kwargs)
+        self._commit(
+            spark,
+            batch_id,
+            {"owner": new_owner, "pairs": new_pairs_rel},
+            {"owner": touched_chashes, "pairs": new_pairs.select("a_id", "b_id")},
         )
 
     # -- query side ---------------------------------------------------------

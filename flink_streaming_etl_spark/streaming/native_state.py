@@ -4,28 +4,17 @@ semantics re-hosted on Spark's own keyed streaming state, so the engine
 owns state placement, incremental checkpointing, and idle-key TTL
 instead of the hand-built BucketedState relations.
 
-Two hosts, largest-state accumulator first (the distinct count's
-live-pair relation grows with the corpus):
-
-* :class:`NativeDistinctCount` — ``applyInPandasWithState``: per-GROUP
-  GroupState holds the (value → refcount) map as two parallel arrays
-  plus the folded distinct count. Engine-checkpointed (restart-proven),
-  idle groups expire through ``GroupStateTimeout.ProcessingTimeTimeout``
-  (Flink state-TTL semantics: a reappearing group starts fresh). The
-  granularity trade vs the hand-built twin: state updates are per-group
-  (the whole array struct rewrites when any of the group's values
-  change), where ``IncrementalDistinctCount``'s bucketed save rewrites
-  per touched hash bucket — still O(touched groups) per batch, never
-  O(|state|).
-* :class:`TransformWithStateDistinctCount` — Spark 4.1's
-  ``transformWithStateInPandas``: TRUE per-value granularity (MapState
-  point updates) + engine-native per-key TTL. Code-complete but
-  ENV-GATED: the PySpark driver worker for transformWithState imports
-  ``google.protobuf``, which this container does not ship (verified:
-  ``STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE`` /
-  ``ImportError: google.protobuf``), and installs are off-limits.
-  :func:`transform_with_state_available` reports the gate; the pytest
-  suite runs the class when the import succeeds and skips otherwise.
+The host is :class:`NativeDistinctCount` — ``applyInPandasWithState``
+(the distinct count's live-pair relation is the largest state that
+grows with the corpus): per-GROUP GroupState holds the (value →
+refcount) map as two parallel arrays plus the folded distinct count.
+Engine-checkpointed (restart-proven), idle groups expire through
+``GroupStateTimeout.ProcessingTimeTimeout`` (Flink state-TTL semantics:
+a reappearing group starts fresh). The granularity trade vs the
+hand-built twin: state updates are per-group (the whole array struct
+rewrites when any of the group's values change), where
+``IncrementalDistinctCount``'s bucketed save rewrites per touched hash
+bucket — still O(touched groups) per batch, never O(|state|).
 
 Delivery contract matches the foreachBatch twin: per-key exactly-once
 in-order changelog with faithful before-images (S6). Equality,
@@ -40,17 +29,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from flink_streaming_etl_spark.streaming.incremental import changelog_deltas
-
-
-def transform_with_state_available() -> bool:
-    """True when the transformWithState Python worker can actually run
-    here (it needs google.protobuf at minimum)."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
 
 
 def _dc_fold(key_names: list[str], retention_ms: int | None):
@@ -192,97 +170,3 @@ class NativeDistinctCount:
             .start(**start_kwargs)
         )
 
-
-class TransformWithStateDistinctCount:
-    """The same operator on Spark 4.1 ``transformWithStateInPandas`` —
-    MapState gives per-VALUE point updates and the engine owns per-key
-    TTL natively. Requires ``transform_with_state_available()`` (see
-    module docstring) and the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass``)."""
-
-    OUTPUT = "k0 string, distinct_cnt long"
-
-    def __init__(
-        self,
-        key_exprs: Callable[[Column], list[Column]],
-        value: Callable[[Column], Column],
-        predicate: Callable[[Column], Column] | None = None,
-        ttl_ms: int | None = None,
-    ):
-        if not transform_with_state_available():
-            raise ImportError(
-                "transformWithState needs google.protobuf, which this "
-                "environment does not provide (see module docstring); "
-                "use NativeDistinctCount"
-            )
-        self.key_exprs = key_exprs
-        self.value = value
-        self.predicate = predicate
-        self.ttl_ms = ttl_ms
-
-    def _processor(self):
-        from pyspark.sql.streaming.stateful_processor import (
-            StatefulProcessor,
-        )
-
-        ttl = self.ttl_ms
-
-        class _Processor(StatefulProcessor):
-            def init(self, handle):
-                self._refs = handle.getMapState(
-                    "refs", "v string", "cnt long", ttlDurationMs=ttl
-                )
-                self._n = handle.getValueState(
-                    "n", "n long", ttlDurationMs=ttl
-                )
-
-            def handleInputRows(self, key, rows, timer_values):
-                import pandas as pd
-
-                agg: dict = {}
-                for pdf in rows:
-                    for v, s in zip(pdf["v"].tolist(), pdf["sign"].tolist()):
-                        agg[v] = agg.get(v, 0) + int(s)
-                n = int(self._n.get()[0]) if self._n.exists() else 0
-                for v, d in agg.items():
-                    if d == 0:
-                        continue
-                    old = (
-                        int(self._refs.getValue((v,))[0])
-                        if self._refs.containsKey((v,))
-                        else 0
-                    )
-                    new = old + d
-                    if old <= 0 < new:
-                        n += 1
-                    elif old > 0 >= new:
-                        n -= 1
-                    if new == 0:
-                        self._refs.removeKey((v,))
-                    else:
-                        self._refs.updateValue((v,), (new,))
-                self._n.update((n,))
-                yield pd.DataFrame(
-                    {"k0": [key[0]], "distinct_cnt": [n]}
-                )
-
-            def close(self):
-                pass
-
-        return _Processor()
-
-    def transform(self, changelog_stream: DataFrame) -> DataFrame:
-        img = F.col("img")
-        deltas = changelog_deltas(changelog_stream, self.predicate)
-        (key,) = self.key_exprs(img)  # pilot scope: single-key grouping
-        prepared = deltas.select(
-            key.cast("string").alias("k0"),
-            self.value(img).cast("string").alias("v"),
-            F.col("sign").cast("int").alias("sign"),
-        ).filter(F.col("v").isNotNull())
-        return prepared.groupBy("k0").transformWithStateInPandas(
-            self._processor(),
-            outputStructType=self.OUTPUT,
-            outputMode="Update",
-            timeMode="ProcessingTime" if self.ttl_ms is not None else "None",
-        )

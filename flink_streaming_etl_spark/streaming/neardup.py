@@ -40,8 +40,8 @@ touches candidates only — the batch operator's scale shape, per fold.
 Idle retention (T5): kept docs whose bands go unprobed for
 ``retention_batches`` folds age out of BOTH index relations (the
 decision log keeps their rows — decisions are history, not index).
-Durable state rides BucketedState; replays are idempotent by batch id
-with the T6 fold-then-commit ordering.
+Durability, replay guard and fold-then-commit (T6) follow
+:class:`~flink_streaming_etl_spark.streaming.state_store.DurableFold`.
 """
 
 from __future__ import annotations
@@ -64,6 +64,7 @@ from flink_streaming_etl_spark.operators.dedup import (
     minhash_signatures,
 )
 from flink_streaming_etl_spark.functions import q6
+from flink_streaming_etl_spark.streaming.state_store import DurableFold
 
 _BAND_SCHEMA = StructType(
     [
@@ -122,11 +123,15 @@ def _jaccard_ok(sh_a, sh_b, threshold: float):
     return q6(common.cast("double") / union) >= F.lit(threshold)
 
 
-class MinHashNearDupAccumulator:
+class MinHashNearDupAccumulator(DurableFold):
     """Incremental new-vs-corpus MinHash-LSH near-dup dedup with
     distributed state."""
 
-    _N_BUCKETS = 64
+    _STATE = {
+        "band": (_BAND_SCHEMA, ["band_key"]),
+        "sh": (_SH_SCHEMA, ["doc_id"]),
+        "kept": (_KEPT_SCHEMA, ["doc_id"]),
+    }
 
     def __init__(
         self,
@@ -137,86 +142,7 @@ class MinHashNearDupAccumulator:
     ):
         self.threshold = float(threshold)
         self.retention_batches = retention_batches
-        self.band_rel: DataFrame | None = None
-        self.sh_rel: DataFrame | None = None
-        self.kept_rel: DataFrame | None = None
-        self.n_batches = 0
-        self.last_batch_id: int | None = None
-        self._save_seq = 0
-        self.store = None
-        self._restored = True
-        if store_root is not None:
-            from flink_streaming_etl_spark.streaming.state_store import (
-                AccumulatorStateStore,
-            )
-
-            self.store = AccumulatorStateStore(store_root)
-            self._restored = False
-            if spark is not None:
-                self._restore(spark)
-
-    # -- durability -------------------------------------------------------
-
-    def _restore(self, spark: SparkSession) -> None:
-        self._restored = True
-        loaded = self.store.load(spark)
-        if loaded is None:
-            return
-        bid, rels, extra = loaded
-        self._save_seq = bid
-        self.last_batch_id = extra.get("last_batch_id", bid)
-        self.n_batches = int(extra.get("n_batches", 0))
-        for name, attr in (
-            ("band", "band_rel"), ("sh", "sh_rel"), ("kept", "kept_rel"),
-        ):
-            if name in rels:
-                setattr(self, attr, rels[name].localCheckpoint(eager=True))
-
-    def _save(
-        self,
-        spark: SparkSession,
-        last_bid: int | None,
-        band_rel: DataFrame | None,
-        sh_rel: DataFrame | None,
-        kept_rel: DataFrame | None,
-        n_batches: int,
-        touched_bands: DataFrame | None,
-        touched_docs: DataFrame | None,
-    ) -> None:
-        if self.store is None:
-            return
-        from flink_streaming_etl_spark.streaming.state_store import (
-            BucketedState,
-        )
-
-        empty = lambda s: spark.createDataFrame([], s)  # noqa: E731
-        seq = self._save_seq + 1
-        self.store.save(
-            seq,
-            {},
-            extra={"last_batch_id": last_bid, "n_batches": n_batches},
-            bucketed={
-                "band": BucketedState(
-                    band_rel if band_rel is not None else empty(_BAND_SCHEMA),
-                    ["band_key"],
-                    n_buckets=self._N_BUCKETS,
-                    touched=touched_bands,
-                ),
-                "sh": BucketedState(
-                    sh_rel if sh_rel is not None else empty(_SH_SCHEMA),
-                    ["doc_id"],
-                    n_buckets=self._N_BUCKETS,
-                    touched=touched_docs,
-                ),
-                "kept": BucketedState(
-                    kept_rel if kept_rel is not None else empty(_KEPT_SCHEMA),
-                    ["doc_id"],
-                    n_buckets=self._N_BUCKETS,
-                    touched=touched_docs,
-                ),
-            },
-        )
-        self._save_seq = seq
+        super().__init__(store_root, spark)
 
     # -- streaming side ---------------------------------------------------
 
@@ -227,11 +153,8 @@ class MinHashNearDupAccumulator:
         exact-verify candidates, decide keep/drop, extend the index with
         the kept docs — all relation-side."""
         spark = batch_documents.sparkSession
-        if not self._restored:
-            self._restore(spark)
-        if batch_id is not None:
-            if self.last_batch_id is not None and batch_id <= self.last_batch_id:
-                return  # replay of a COMMITTED batch — already folded
+        if self._replayed(spark, batch_id):
+            return
         n = self.n_batches + 1
         width = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
@@ -363,27 +286,14 @@ class MinHashNearDupAccumulator:
             new_sh = new_sh.join(evicted_docs, "doc_id", "anti")
         new_sh = eager_checkpoint(new_sh.coalesce(width))
 
-        if self.store is not None and batch_id is not None:
-            touched_docs = batch_ids
-            if evicted_docs is not None:
-                touched_docs = touched_docs.unionByName(evicted_docs)
-            self._save(
-                spark, batch_id, new_band, new_sh, new_kept_rel, n,
-                touched_bands=touched_bands, touched_docs=touched_docs,
-            )
-        self.band_rel = new_band
-        self.sh_rel = new_sh
-        self.kept_rel = new_kept_rel
-        self.n_batches = n
-        if batch_id is not None:
-            self.last_batch_id = int(batch_id)
-
-    def attach(self, stream_documents: DataFrame, **start_kwargs):
-        """Wire onto a streaming DataFrame via foreachBatch and start."""
-        return (
-            stream_documents.writeStream.outputMode("append")
-            .foreachBatch(lambda batch, bid: self.add_batch(batch, bid))
-            .start(**start_kwargs)
+        touched_docs = batch_ids
+        if evicted_docs is not None:
+            touched_docs = touched_docs.unionByName(evicted_docs)
+        self._commit(
+            spark,
+            batch_id,
+            {"band": new_band, "sh": new_sh, "kept": new_kept_rel},
+            {"band": touched_bands, "sh": touched_docs, "kept": touched_docs},
         )
 
     # -- query side -------------------------------------------------------

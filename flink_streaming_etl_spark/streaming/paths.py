@@ -29,11 +29,9 @@ corpus's active users). Per micro-batch:
   semantics, not approximation) and their rows dropped — both decided
   relation-side.
 
-Durable state rides ``BucketedState`` when ``store_root`` is given.
-Replays are idempotent by batch id; fold-then-commit (T6): folds land
-in locals/fresh relations, ``self.*`` + ``last_batch_id`` commit only
-after every Spark phase (and the durable save) succeeds — pinned by
-tests/test_round12.py's failure-at-the-last-step retry test.
+Durability, replay guard and fold-then-commit (T6) follow
+:class:`~flink_streaming_etl_spark.streaming.state_store.DurableFold` —
+pinned by tests/test_round12.py's failure-at-the-last-step retry test.
 
 Equality pin (tests/test_round10.py): fed any batch-monotone split,
 ``result()`` (closed + still-open paths) equals the batch operator's
@@ -60,6 +58,7 @@ from flink_streaming_etl_spark.operators.analytics import (
     PATH_GAP_MINUTES,
     PATH_MAX_STEPS,
 )
+from flink_streaming_etl_spark.streaming.state_store import DurableFold
 
 _OPEN_SCHEMA = StructType(
     [
@@ -78,10 +77,19 @@ _COUNTS_SCHEMA = StructType(
 )
 
 
-class EventPathAccumulator:
+class EventPathAccumulator(DurableFold):
     """Incremental gap-session path counting, state relation-side."""
 
-    _N_BUCKETS = 64
+    #: ``open_rel``: OPEN sessions as a DISTRIBUTED relation (never a
+    #: driver dict); ``counts_rel``: closed-path frequencies (path,
+    #: n_sessions), DISTRIBUTED too (r14, r13 verdict #2 — |types|^k is
+    #: driver-unsafe for large alphabets), collected only by the
+    #: diagnostic ``counts`` accessor and ``top_paths(k)``. A save
+    #: rewrites only the buckets of paths the batch closed.
+    _STATE = {
+        "open": (_OPEN_SCHEMA, ["user_id"]),
+        "counts": (_COUNTS_SCHEMA, ["path"]),
+    }
 
     def __init__(
         self,
@@ -94,111 +102,23 @@ class EventPathAccumulator:
         self.gap_us = gap_minutes * 60 * 1_000_000
         self.max_steps = max_steps
         self.retention_batches = retention_batches
-        #: OPEN sessions as a DISTRIBUTED relation (never a driver dict)
-        self.open_rel: DataFrame | None = None
-        #: closed-path frequencies (path, n_sessions) as a DISTRIBUTED
-        #: relation (r14, r13 verdict #2 — |types|^k is driver-unsafe
-        #: for large alphabets); collected only by the diagnostic
-        #: ``counts`` accessor and ``top_paths(k)``
-        self.counts_rel: DataFrame | None = None
-        self.n_batches = 0
-        self.last_batch_id: int | None = None
-        self._save_seq = 0
-        self.store = None
-        self._restored = True
-        if store_root is not None:
-            from flink_streaming_etl_spark.streaming.state_store import (
-                AccumulatorStateStore,
-            )
+        super().__init__(store_root, spark)
 
-            self.store = AccumulatorStateStore(store_root)
-            self._restored = False
-            if spark is not None:
-                self._restore(spark)
-
-    # -- durability -------------------------------------------------------
-
-    def _restore(self, spark: SparkSession) -> None:
-        self._restored = True
-        loaded = self.store.load(spark)
-        if loaded is None:
-            return
-        bid, rels, extra = loaded
-        self._save_seq = bid
-        self.last_batch_id = extra.get("last_batch_id", bid)
-        self.n_batches = int(extra.get("n_batches", 0))
-        if "counts" in rels:
-            self.counts_rel = rels["counts"].localCheckpoint(eager=True)
-        elif extra.get("counts"):
+    def _on_restore(self, spark: SparkSession, extra: dict) -> None:
+        if self.counts_rel is None and extra.get("counts"):
             # pre-r14 stores carried the counts dict in extra — rebuild
             # the relation once on restore (one-way migration)
             self.counts_rel = spark.createDataFrame(
                 [(p, int(n)) for p, n in extra["counts"].items()],
                 _COUNTS_SCHEMA,
             ).localCheckpoint(eager=True)
-        if "open" in rels:
-            self.open_rel = rels["open"].localCheckpoint(eager=True)
-
-    def _save(
-        self,
-        spark: SparkSession,
-        last_bid: int | None,
-        open_rel: DataFrame | None,
-        counts_rel: DataFrame | None,
-        n_batches: int,
-        touched_users: DataFrame | None,
-        touched_paths: DataFrame | None,
-    ) -> None:
-        if self.store is None:
-            return
-        from flink_streaming_etl_spark.streaming.state_store import (
-            BucketedState,
-        )
-
-        seq = self._save_seq + 1
-        self.store.save(
-            seq,
-            {},
-            extra={
-                "last_batch_id": last_bid,
-                "n_batches": n_batches,
-            },
-            bucketed={
-                "open": BucketedState(
-                    open_rel
-                    if open_rel is not None
-                    else spark.createDataFrame([], _OPEN_SCHEMA),
-                    ["user_id"],
-                    n_buckets=self._N_BUCKETS,
-                    touched=touched_users,
-                ),
-                # only the buckets of paths this batch closed are
-                # rewritten — save volume ∝ batch, not lifetime paths
-                "counts": BucketedState(
-                    counts_rel
-                    if counts_rel is not None
-                    else spark.createDataFrame([], _COUNTS_SCHEMA),
-                    ["path"],
-                    n_buckets=self._N_BUCKETS,
-                    touched=touched_paths,
-                ),
-            },
-        )
-        self._save_seq = seq
 
     # -- streaming side -----------------------------------------------------
 
     def add_batch(self, batch_events: DataFrame, batch_id: int | None = None) -> None:
         spark = batch_events.sparkSession
-        if not self._restored:
-            self._restore(spark)
-        # Transactional fold ordering (T6): replay guard CHECKED here,
-        # all state and the batch id COMMITTED only after the whole fold
-        # succeeds — a mid-fold failure retried under the same epoch id
-        # re-folds cleanly instead of being skipped as a replay.
-        if batch_id is not None:
-            if self.last_batch_id is not None and batch_id <= self.last_batch_id:
-                return  # replay of a COMMITTED batch — already folded
+        if self._replayed(spark, batch_id):
+            return
         n_batches = self.n_batches + 1
         width = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
@@ -357,30 +277,17 @@ class EventPathAccumulator:
             new_counts = closed_agg
         new_counts = eager_checkpoint(new_counts.coalesce(width))
         self._evict()
-        if self.store is not None and batch_id is not None:
-            self._save(
-                spark, batch_id, new_open, new_counts, n_batches,
-                touched_users=users_df,
-                touched_paths=closed_agg.select("path"),
-            )
-        # fold succeeded — commit memory + batch id
-        self.open_rel = new_open
-        self.counts_rel = new_counts
-        self.n_batches = n_batches
-        if batch_id is not None:
-            self.last_batch_id = int(batch_id)
+        self._commit(
+            spark,
+            batch_id,
+            {"open": new_open, "counts": new_counts},
+            {"open": users_df, "counts": closed_agg.select("path")},
+        )
 
     def _evict(self) -> None:
         """Eviction is decided relation-side inside :meth:`add_batch`;
         this hook marks the end of the fold's Spark phases and exists as
         the pre-commit failure-injection point the T6 retry tests pin."""
-
-    def attach(self, stream_events: DataFrame, **start_kwargs):
-        return (
-            stream_events.writeStream.outputMode("append")
-            .foreachBatch(lambda batch, bid: self.add_batch(batch, bid))
-            .start(**start_kwargs)
-        )
 
     # -- query side -----------------------------------------------------------
 

@@ -1,5 +1,6 @@
-"""Durable accumulator state — parquet-backed save/restore for the
-±delta accumulators (IncrementalTopK, IncrementalDistinctCount, …).
+"""Durable accumulator state: parquet-backed save/restore for the
+streaming accumulators, and the one durable-fold protocol that the
+relation-side accumulators share.
 
 Why: the accumulators keep their state as localCheckpoint'd DataFrames —
 session-local. With a PERSISTENT Structured Streaming checkpoint, a
@@ -8,6 +9,31 @@ accumulator (empty state, empty replay guard) would silently fold only
 the NEW batches onto nothing — wrong answers, not a crash. Durable state
 must therefore travel WITH the streaming checkpoint: save after every
 folded batch, restore before re-attach.
+
+Durable-fold protocol (:class:`DurableFold`). The relation-side
+accumulators (text, media, MinHash and embedding dedup, event paths and
+transitions, the CEP matchers) declare their state once, as ``_STATE``:
+name → (schema, key columns), each relation held in ``<name>_rel``.
+The base class owns everything else:
+
+- a store under ``store_root``, restored when ``spark`` is given, else
+  lazily on the first fold;
+- the replay guard: a batch id at or below ``last_batch_id`` is a replay
+  of a committed batch and folds nothing;
+- fold-then-commit (T6): a fold builds its new relations in locals; the
+  durable save runs next (every relation bucketed on its keys into
+  ``_N_BUCKETS`` buckets, only the buckets of the fold's touched keys
+  rewritten, an empty frame of the schema standing in for absent state),
+  then ``<name>_rel``, ``n_batches`` and ``last_batch_id`` commit. A
+  fold or save that fails leaves memory and store at the previous batch,
+  so a same-epoch retry re-folds instead of being skipped as a replay;
+  a crash between save and commit restores the saved state on restart;
+- a store version counter (``_save_seq``) apart from batch ids, so a
+  save that is not a fold (CEP's flush) gets a fresh version directory;
+- ``attach``: foreachBatch onto ``add_batch``.
+
+Meta ``extra`` holds ``last_batch_id`` and ``n_batches`` plus whatever
+the fold passes (the transitions' ``counts`` matrix).
 
 Layout (one root per accumulator):
 
@@ -46,6 +72,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 #: bucket-map value marking a touched bucket that ended the batch empty
 _EMPTY = "empty"
@@ -215,3 +242,118 @@ class AccumulatorStateStore:
                 # never enters the relation's schema
                 rels[name] = spark.read.parquet(*paths).localCheckpoint(eager=True)
         return bid, rels, meta.get("extra", {})
+
+
+class DurableFold:
+    """Base of the relation-side accumulators: store, restore, replay
+    guard, bucketed save and commit (see the module docstring).
+    Subclasses declare ``_STATE`` and implement ``add_batch``."""
+
+    _N_BUCKETS = 64
+    #: state relation name → (schema, bucket key columns); the relation
+    #: lives in ``<name>_rel``
+    _STATE: dict[str, tuple[StructType, list[str]]] = {}
+
+    def __init__(self, store_root: str | None, spark: SparkSession | None):
+        for name in self._STATE:
+            setattr(self, f"{name}_rel", None)
+        self.n_batches = 0
+        self.last_batch_id: int | None = None
+        self._save_seq = 0
+        self.store = (
+            AccumulatorStateStore(store_root) if store_root is not None else None
+        )
+        self._restored = self.store is None
+        if self.store is not None and spark is not None:
+            self._restore(spark)
+
+    def _restore(self, spark: SparkSession) -> None:
+        self._restored = True
+        loaded = self.store.load(spark)
+        if loaded is None:
+            return
+        bid, rels, extra = loaded
+        self._save_seq = bid
+        self.last_batch_id = extra.get("last_batch_id", bid)
+        self.n_batches = int(extra.get("n_batches", 0))
+        for name in self._STATE:
+            if name in rels:
+                setattr(self, f"{name}_rel", rels[name])
+        self._on_restore(spark, extra)
+
+    def _on_restore(self, spark: SparkSession, extra: dict) -> None:
+        """Rebuild state kept outside ``_STATE`` from a restored store."""
+
+    def _replayed(self, spark: SparkSession, batch_id: int | None) -> bool:
+        """Restore if still pending; True when ``batch_id`` is already
+        committed (the fold must then do nothing)."""
+        if not self._restored:
+            self._restore(spark)
+        return (
+            batch_id is not None
+            and self.last_batch_id is not None
+            and batch_id <= self.last_batch_id
+        )
+
+    def _save_state(
+        self,
+        spark: SparkSession,
+        last_bid: int | None,
+        n_batches: int,
+        state: dict[str, DataFrame | None],
+        touched: dict[str, DataFrame | None],
+        extra: dict | None = None,
+    ) -> None:
+        """Save ``state`` under a fresh store version; a relation whose
+        ``touched`` keys are None is written in full."""
+        if self.store is None:
+            return
+        seq = self._save_seq + 1
+        self.store.save(
+            seq,
+            {},
+            extra={
+                "last_batch_id": last_bid,
+                "n_batches": n_batches,
+                **(extra or {}),
+            },
+            bucketed={
+                name: BucketedState(
+                    state[name]
+                    if state[name] is not None
+                    else spark.createDataFrame([], schema),
+                    keys,
+                    n_buckets=self._N_BUCKETS,
+                    touched=touched[name],
+                )
+                for name, (schema, keys) in self._STATE.items()
+            },
+        )
+        self._save_seq = seq
+
+    def _commit(
+        self,
+        spark: SparkSession,
+        batch_id: int | None,
+        state: dict[str, DataFrame],
+        touched: dict[str, DataFrame],
+        extra: dict | None = None,
+    ) -> None:
+        """Save the folded relations (when the batch has an id), then
+        commit them with ``n_batches`` and ``last_batch_id``."""
+        n = self.n_batches + 1
+        if batch_id is not None:
+            self._save_state(spark, batch_id, n, state, touched, extra)
+        for name, df in state.items():
+            setattr(self, f"{name}_rel", df)
+        self.n_batches = n
+        if batch_id is not None:
+            self.last_batch_id = int(batch_id)
+
+    def attach(self, stream: DataFrame, **start_kwargs):
+        """Wire onto a streaming DataFrame via foreachBatch and start."""
+        return (
+            stream.writeStream.outputMode("append")
+            .foreachBatch(lambda batch, bid: self.add_batch(batch, bid))
+            .start(**start_kwargs)
+        )

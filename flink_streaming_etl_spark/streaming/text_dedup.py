@@ -27,18 +27,15 @@ repo's canonical 100-TB bottleneck class):
 - **idle retention** (T5): owner rows unseen for ``retention_batches``
   folds are dropped relation-side (a filter on the carried
   ``last_seen`` fold-stamp) — no driver-side eviction scan.
-- durable state rides :class:`~flink_streaming_etl_spark.streaming
-  .state_store.BucketedState` when ``store_root`` is given: a batch
-  rewrites only the buckets its touched fingerprints / doc ids hash
-  into.
+- durability, replay guard and fold-then-commit (T6) follow
+  :class:`~flink_streaming_etl_spark.streaming.state_store.DurableFold`;
+  a save rewrites only the buckets the batch's fingerprints / doc ids
+  hash into.
 
 Driver transfer per fold: O(1) scalars (the eager_checkpoint counts).
 Pinned by the round-13 collect-spy test.
 
-Replays are idempotent by batch id; the fold-then-commit ordering
-(T6) folds into locals/fresh relations and commits ``self.*`` plus
-``last_batch_id`` only after every Spark phase and the durable save
-succeed. First-owner contract (pinned in tests/test_round9.py):
+First-owner contract (pinned in tests/test_round9.py):
 per fingerprint only the FIRST arriving owner is kept; within a batch
 the lowest doc_id wins — identical to the old per-row loop.
 """
@@ -57,6 +54,7 @@ from pyspark.sql.types import (
 
 from flink_streaming_etl_spark.ckpt import eager_checkpoint
 from flink_streaming_etl_spark.operators.dedup import _prefix_fp
+from flink_streaming_etl_spark.streaming.state_store import DurableFold
 
 _OWNER_SCHEMA = StructType(
     [
@@ -74,10 +72,16 @@ _KEPT_SCHEMA = StructType(
 )
 
 
-class BloomTextDedupAccumulator:
+class BloomTextDedupAccumulator(DurableFold):
     """Incremental new-vs-corpus text dedup with distributed state."""
 
-    _N_BUCKETS = 64
+    #: ``owner_rel``: fp → (owner, last_seen), a DISTRIBUTED relation —
+    #: never a driver dict (r12 verdict #1); ``kept_rel``: the (doc_id,
+    #: kept) decision log, distributed
+    _STATE = {
+        "owner": (_OWNER_SCHEMA, ["fp"]),
+        "kept": (_KEPT_SCHEMA, ["doc_id"]),
+    }
 
     def __init__(
         self,
@@ -86,83 +90,7 @@ class BloomTextDedupAccumulator:
         spark: SparkSession | None = None,
     ):
         self.retention_batches = retention_batches
-        #: fp → (owner, last_seen) as a DISTRIBUTED relation — never a
-        #: driver dict (r12 verdict #1)
-        self.owner_rel: DataFrame | None = None
-        #: (doc_id, kept) decision log, distributed
-        self.kept_rel: DataFrame | None = None
-        self.n_batches = 0
-        self.last_batch_id: int | None = None
-        self._save_seq = 0
-        self.store = None
-        self._restored = True
-        if store_root is not None:
-            from flink_streaming_etl_spark.streaming.state_store import (
-                AccumulatorStateStore,
-            )
-
-            self.store = AccumulatorStateStore(store_root)
-            self._restored = False
-            if spark is not None:
-                self._restore(spark)
-
-    # -- durability -----------------------------------------------------
-
-    def _restore(self, spark: SparkSession) -> None:
-        self._restored = True
-        loaded = self.store.load(spark)
-        if loaded is None:
-            return
-        bid, rels, extra = loaded
-        self._save_seq = bid
-        self.last_batch_id = extra.get("last_batch_id", bid)
-        self.n_batches = int(extra.get("n_batches", 0))
-        if "owner" in rels:
-            self.owner_rel = rels["owner"].localCheckpoint(eager=True)
-        if "kept" in rels:
-            self.kept_rel = rels["kept"].localCheckpoint(eager=True)
-
-    def _save(
-        self,
-        spark: SparkSession,
-        last_bid: int | None,
-        owner_rel: DataFrame | None,
-        kept_rel: DataFrame | None,
-        n_batches: int,
-        touched_fps: DataFrame | None,
-        touched_docs: DataFrame | None,
-    ) -> None:
-        if self.store is None:
-            return
-        from flink_streaming_etl_spark.streaming.state_store import (
-            BucketedState,
-        )
-
-        seq = self._save_seq + 1
-        self.store.save(
-            seq,
-            {},
-            extra={"last_batch_id": last_bid, "n_batches": n_batches},
-            bucketed={
-                "owner": BucketedState(
-                    owner_rel
-                    if owner_rel is not None
-                    else spark.createDataFrame([], _OWNER_SCHEMA),
-                    ["fp"],
-                    n_buckets=self._N_BUCKETS,
-                    touched=touched_fps,
-                ),
-                "kept": BucketedState(
-                    kept_rel
-                    if kept_rel is not None
-                    else spark.createDataFrame([], _KEPT_SCHEMA),
-                    ["doc_id"],
-                    n_buckets=self._N_BUCKETS,
-                    touched=touched_docs,
-                ),
-            },
-        )
-        self._save_seq = seq
+        super().__init__(store_root, spark)
 
     # -- streaming side -------------------------------------------------
 
@@ -173,13 +101,8 @@ class BloomTextDedupAccumulator:
         for every batch doc against the owner relation; within a batch,
         lower doc_id wins (the batch operator's deterministic rule)."""
         spark = batch_documents.sparkSession
-        if not self._restored:
-            self._restore(spark)
-        # replay guard CHECKED here, state/batch id COMMITTED at the end
-        # (T6 fold-then-commit)
-        if batch_id is not None:
-            if self.last_batch_id is not None and batch_id <= self.last_batch_id:
-                return  # replay of a COMMITTED batch — already folded
+        if self._replayed(spark, batch_id):
+            return
         n = self.n_batches + 1
         width = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
@@ -247,24 +170,11 @@ class BloomTextDedupAccumulator:
             new_kept = dec
         new_kept = eager_checkpoint(new_kept.coalesce(width))
 
-        # durable save from the NEW state, then commit memory + batch id
-        if self.store is not None and batch_id is not None:
-            self._save(
-                spark, batch_id, new_owner, new_kept, n,
-                touched_fps=touched_fps, touched_docs=batch_docs,
-            )
-        self.owner_rel = new_owner
-        self.kept_rel = new_kept
-        self.n_batches = n
-        if batch_id is not None:
-            self.last_batch_id = int(batch_id)
-
-    def attach(self, stream_documents: DataFrame, **start_kwargs):
-        """Wire onto a streaming DataFrame via foreachBatch and start."""
-        return (
-            stream_documents.writeStream.outputMode("append")
-            .foreachBatch(lambda batch, bid: self.add_batch(batch, bid))
-            .start(**start_kwargs)
+        self._commit(
+            spark,
+            batch_id,
+            {"owner": new_owner, "kept": new_kept},
+            {"owner": touched_fps, "kept": batch_docs},
         )
 
     # -- query side -------------------------------------------------------

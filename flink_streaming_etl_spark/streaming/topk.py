@@ -38,6 +38,11 @@ from pyspark.sql.window import Window
 
 from flink_streaming_etl_spark.sources.cdc import apply_changelog
 from flink_streaming_etl_spark.streaming.incremental import changelog_deltas
+from flink_streaming_etl_spark.streaming.retention import (
+    GroupRetention,
+    evict,
+    group_match,
+)
 
 
 class IncrementalTopK:
@@ -71,10 +76,6 @@ class IncrementalTopK:
         #: groups; a reappearing group starts fresh — Flink TTL semantics)
         self._retention = None
         if retention_batches is not None:
-            from flink_streaming_etl_spark.streaming.retention import (
-                GroupRetention,
-            )
-
             self._retention = GroupRetention(self.group_cols, retention_batches)
         #: durable state (see streaming/state_store.py): REQUIRED when
         #: attach() uses a persistent checkpointLocation — a restarted
@@ -122,15 +123,6 @@ class IncrementalTopK:
         img = changelog_deltas(chunk, None).select("img.*")
         return img.select(*self.group_cols).distinct()
 
-    def _group_match(self, left: DataFrame, right: DataFrame):
-        """Null-safe group-key equality for the semi/anti state probes —
-        a plain column-list join would never match the NULL group."""
-        cond = None
-        for c in self.group_cols:
-            e = left[c].eqNullSafe(right[c])
-            cond = e if cond is None else cond & e
-        return cond
-
     def apply(self, chunk: DataFrame, batch_id: int | None = None) -> DataFrame | None:
         """Fold one micro-batch; return the refreshed top-k rows of the
         touched groups (None on replay). A touched group that ends with
@@ -154,19 +146,21 @@ class IncrementalTopK:
         # Expression joins (null-safe) keep the left side's column order,
         # so result() matches recompute() column-for-column.
         slice_ = new_state.join(
-            F.broadcast(touched), self._group_match(new_state, touched), "semi"
+            F.broadcast(touched),
+            group_match(new_state, touched, self.group_cols),
+            "semi",
         )
         refreshed = self._rank(slice_).localCheckpoint(eager=True)
         if self.topk is None:
             new_topk = refreshed
         else:
             kept = self.topk.join(
-                F.broadcast(touched), self._group_match(self.topk, touched), "anti"
+                F.broadcast(touched),
+                group_match(self.topk, touched, self.group_cols),
+                "anti",
             )
             new_topk = kept.unionByName(refreshed).localCheckpoint(eager=True)
         if self._retention is not None:
-            from flink_streaming_etl_spark.streaming.retention import evict
-
             idle = self._retention.tick(touched)
             if idle is not None:
                 new_state = evict(new_state, idle, self.group_cols)

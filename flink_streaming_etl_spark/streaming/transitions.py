@@ -20,14 +20,13 @@ distinct users). Per micro-batch:
   ``_last_fold`` stamp.
 
 The count matrix itself stays a driver dict — it is |types|²-bounded by
-construction, the same bound that makes the two collects safe. Durable
-state rides ``BucketedState`` when ``store_root`` is given.
+construction, the same bound that makes the two collects safe; it is
+saved in the store's meta ``extra``. Durability, replay guard and
+fold-then-commit (T6) follow
+:class:`~flink_streaming_etl_spark.streaming.state_store.DurableFold`.
 
 Ordering contract: per-user events must arrive batch-monotonically (the
-PK-keyed Kafka guarantee, S6). Replays are idempotent by batch id;
-fold-then-commit (T6): folds land in locals/fresh relations and
-``self.*`` + ``last_batch_id`` commit only after every Spark phase and
-the durable save succeed.
+PK-keyed Kafka guarantee, S6).
 
 Equality pin (tests/test_round9.py): fed any batch-monotone split of
 the events table, ``result()`` equals the batch operator's full-table
@@ -57,6 +56,7 @@ from pyspark.sql.types import (
 )
 
 from flink_streaming_etl_spark.ckpt import eager_checkpoint
+from flink_streaming_etl_spark.streaming.state_store import DurableFold
 
 _LAST_SCHEMA = StructType(
     [
@@ -69,10 +69,12 @@ _LAST_SCHEMA = StructType(
 )
 
 
-class EventTransitionAccumulator:
+class EventTransitionAccumulator(DurableFold):
     """Incremental per-user transition counting, state relation-side."""
 
-    _N_BUCKETS = 64
+    #: ``last_rel``: per-user last event as a DISTRIBUTED relation
+    #: (never a dict)
+    _STATE = {"last": (_LAST_SCHEMA, ["user_id"])}
 
     def __init__(
         self,
@@ -81,90 +83,21 @@ class EventTransitionAccumulator:
         spark: SparkSession | None = None,
     ):
         self.retention_batches = retention_batches
-        #: per-user last event as a DISTRIBUTED relation (never a dict)
-        self.last_rel: DataFrame | None = None
         #: (from, to) → n — |event_types|²-bounded, hence driver-safe
         self.counts: dict[tuple[str, str], int] = defaultdict(int)
-        self.n_batches = 0
-        self.last_batch_id: int | None = None
-        self._save_seq = 0
-        self.store = None
-        self._restored = True
-        if store_root is not None:
-            from flink_streaming_etl_spark.streaming.state_store import (
-                AccumulatorStateStore,
-            )
+        super().__init__(store_root, spark)
 
-            self.store = AccumulatorStateStore(store_root)
-            self._restored = False
-            if spark is not None:
-                self._restore(spark)
-
-    # -- durability -------------------------------------------------------
-
-    def _restore(self, spark: SparkSession) -> None:
-        self._restored = True
-        loaded = self.store.load(spark)
-        if loaded is None:
-            return
-        bid, rels, extra = loaded
-        self._save_seq = bid
-        self.last_batch_id = extra.get("last_batch_id", bid)
-        self.n_batches = int(extra.get("n_batches", 0))
+    def _on_restore(self, spark: SparkSession, extra: dict) -> None:
         self.counts = defaultdict(int)
         for f, t, c in extra.get("counts", []):
             self.counts[(f, t)] = int(c)
-        if "last" in rels:
-            self.last_rel = rels["last"].localCheckpoint(eager=True)
-
-    def _save(
-        self,
-        spark: SparkSession,
-        last_bid: int | None,
-        last_rel: DataFrame | None,
-        counts: dict,
-        n_batches: int,
-        touched_users: DataFrame | None,
-    ) -> None:
-        if self.store is None:
-            return
-        from flink_streaming_etl_spark.streaming.state_store import (
-            BucketedState,
-        )
-
-        seq = self._save_seq + 1
-        self.store.save(
-            seq,
-            {},
-            extra={
-                "last_batch_id": last_bid,
-                "n_batches": n_batches,
-                "counts": [[f, t, int(c)] for (f, t), c in counts.items()],
-            },
-            bucketed={
-                "last": BucketedState(
-                    last_rel
-                    if last_rel is not None
-                    else spark.createDataFrame([], _LAST_SCHEMA),
-                    ["user_id"],
-                    n_buckets=self._N_BUCKETS,
-                    touched=touched_users,
-                )
-            },
-        )
-        self._save_seq = seq
 
     # -- streaming side -----------------------------------------------------
 
     def add_batch(self, batch_events: DataFrame, batch_id: int | None = None) -> None:
         spark = batch_events.sparkSession
-        if not self._restored:
-            self._restore(spark)
-        # replay guard CHECKED here, state/batch id COMMITTED at the end
-        # (T6 fold-then-commit)
-        if batch_id is not None:
-            if self.last_batch_id is not None and batch_id <= self.last_batch_id:
-                return  # replay — already folded
+        if self._replayed(spark, batch_id):
+            return
         n = self.n_batches + 1
         width = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
@@ -232,22 +165,14 @@ class EventTransitionAccumulator:
                 new_last = new_last.filter(F.col("_last_fold") > horizon)
         new_last = eager_checkpoint(new_last.coalesce(width))
 
-        if self.store is not None and batch_id is not None:
-            self._save(
-                spark, batch_id, new_last, counts, n, touched_users=users_df
-            )
-        self.last_rel = new_last
-        self.counts = counts
-        self.n_batches = n
-        if batch_id is not None:
-            self.last_batch_id = int(batch_id)
-
-    def attach(self, stream_events: DataFrame, **start_kwargs):
-        return (
-            stream_events.writeStream.outputMode("append")
-            .foreachBatch(lambda batch, bid: self.add_batch(batch, bid))
-            .start(**start_kwargs)
+        self._commit(
+            spark,
+            batch_id,
+            {"last": new_last},
+            {"last": users_df},
+            extra={"counts": [[f, t, int(c)] for (f, t), c in counts.items()]},
         )
+        self.counts = counts
 
     # -- query side ---------------------------------------------------------
 

@@ -593,6 +593,12 @@ def test_curated_corpus_token_cache_memoized(spark):
         tx._shared_token_relation(docs.limit(10 + i))
     assert _cache.cache_stats()["shared_tokens"] == _cache.DEFAULT_MAX_ENTRIES
     assert a.storageLevel.useMemory is False  # evicted entry was unpersisted
+    # the dedup pair relation rides the same LRU: one entry per corpus
+    from flink_streaming_etl_spark.operators import dedup
+
+    pairs = dedup.minhash_lsh_pairs(docs)
+    assert dedup.minhash_lsh_pairs(docs) is pairs
+    assert _cache.cache_stats()["lsh_pairs"] == 1
     # clear_operator_caches releases everything (the bench isolation hook)
     _cache.clear_operator_caches()
     assert _cache.cache_stats() == {}

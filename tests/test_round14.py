@@ -1,7 +1,7 @@
 """Round 14 (r13 verdict): NFA scan bounds + out-of-fragment routing,
 relation-side path counts, quantified-CEP timeout side output,
 executor-resident state for the corpus-scale dedup accumulators, and the
-transformWithState ±delta pilot."""
+engine-keyed-state ±delta pilot."""
 
 from __future__ import annotations
 
@@ -659,8 +659,7 @@ def test_new_dedup_accumulators_fold_never_collects(spark, monkeypatch):
 
 # ---------------------------------------------------------------------------
 # Task 7: engine-keyed-state ±delta pilot — NativeDistinctCount vs
-# IncrementalDistinctCount (equality, restart, retention). The
-# transformWithState variant is env-gated (google.protobuf absent here).
+# IncrementalDistinctCount (equality, restart, retention).
 
 
 def _dc_batches(spark):
@@ -837,28 +836,6 @@ def test_native_distinct_count_ttl_evicts_idle_groups(spark, tmp_path):
     wait_for(lambda: counts == {"created": 1})
     q.stop()
     assert counts == {"created": 1}
-
-
-def test_transform_with_state_gate_reports_honestly():
-    """The transformWithState variant must refuse cleanly where its
-    Python worker cannot run (no google.protobuf in this container) and
-    construct where it can — the documented env gate."""
-    from flink_streaming_etl_spark.streaming.native_state import (
-        TransformWithStateDistinctCount,
-        transform_with_state_available,
-    )
-
-    if transform_with_state_available():
-        TransformWithStateDistinctCount(
-            key_exprs=lambda img: [img["status"]],
-            value=lambda img: img["user_id"],
-        )
-    else:
-        with pytest.raises(ImportError, match="protobuf"):
-            TransformWithStateDistinctCount(
-                key_exprs=lambda img: [img["status"]],
-                value=lambda img: img["user_id"],
-            )
 
 
 # ---------------------------------------------------------------------------

@@ -1,6 +1,7 @@
 """Session bootstrap robustness: the package zip shipped to executor
-workers is removed when the interpreter exits, and a failed shipment is
-logged, not swallowed. Both run against a stand-in SparkContext, no JVM."""
+workers is removed when the interpreter exits, a failed shipment is
+logged, not swallowed, and the session's size defaults come from the
+host. None of these starts a JVM."""
 
 from __future__ import annotations
 
@@ -44,3 +45,26 @@ def test_failed_shipment_is_logged(caplog):
         session._ensure_workers_can_import(SimpleNamespace(sparkContext=sc))
     assert "could not ship" in caplog.text
     assert not getattr(sc, "_fses_pyfile_added", False)
+
+
+def test_session_defaults_come_from_the_host(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    assert session._cpus() == len(os.sched_getaffinity(0))
+    monkeypatch.setattr(session, "_host_memory_mb", lambda: 15_000)
+    assert session._driver_memory() == "9000m"
+    monkeypatch.setattr(session, "_host_memory_mb", lambda: 256_000)
+    assert session._driver_memory() == "32768m"
+    # the env overrides win; a malformed core count falls back to the host
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "5g")
+    assert session._cpus() == 3
+    assert session._driver_memory() == "5g"
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "many")
+    assert session._cpus() == len(os.sched_getaffinity(0))
+
+
+def test_host_memory_matches_meminfo():
+    with open("/proc/meminfo") as f:
+        total_kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    assert abs(session._host_memory_mb() - total_kb // 1024) <= 1
