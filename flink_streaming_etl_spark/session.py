@@ -100,6 +100,10 @@ def _driver_memory() -> str:
     )
 
 
+#: LIMIT above which ORDER BY … LIMIT sorts globally (see tune_session)
+TOPK_SORT_FALLBACK = 100_000
+
+
 def get_spark(
     app_name: str = "flink-streaming-etl-spark",
     master: str | None = None,
@@ -140,6 +144,7 @@ def get_spark(
         # cleanup continuous. Same setting a production always-on Spark
         # service uses.
         .config("spark.cleaner.periodicGC.interval", "2min")
+        .config("spark.sql.execution.topKSortFallbackThreshold", str(TOPK_SORT_FALLBACK))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -169,3 +174,11 @@ def tune_session(spark: SparkSession) -> None:
     # operators are also written NTZ-safe, but pinning this keeps
     # driver-owned sessions deterministic engine-wide.
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    # ORDER BY … LIMIT n plans TakeOrderedAndProject, whose per-partition
+    # bounded queue is sized by n: an "all rows" limit (top_n=10**9)
+    # allocates past any heap. Above this n the planner sorts globally
+    # and takes n instead — same rows, memory ∝ data. Every registry
+    # query's LIMIT is far below it, so their plans are unchanged.
+    spark.conf.set(
+        "spark.sql.execution.topKSortFallbackThreshold", str(TOPK_SORT_FALLBACK)
+    )

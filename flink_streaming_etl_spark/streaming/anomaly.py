@@ -17,8 +17,9 @@ Scale contract:
 - driver state is bounded by ``retention_days`` per event_type (idle
   state retention, the reference's T5 discipline: old days are evicted
   as the max seen day advances);
-- replays are idempotent by batch id, mirroring
-  :class:`~flink_streaming_etl_spark.streaming.heavy_hitters.MisraGriesAccumulator`.
+- replay guard, commit and attach follow the one durable-fold protocol
+  (:class:`~flink_streaming_etl_spark.streaming.state_store.DurableFold`,
+  empty ``_STATE``).
 
 Reference parity: the reference's day-level aggregation-with-retraction
 queries (flink-ddl.sql day_stats shapes) keep exactly this kind of
@@ -36,9 +37,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_streaming_etl_spark.operators.analytics import ANOMALY_Z_THRESHOLD
+from flink_streaming_etl_spark.streaming.state_store import DurableFold
 
 
-class AnomalyZScoreAccumulator:
+class AnomalyZScoreAccumulator(DurableFold):
     """Mergeable per-(event_type, day) integer totals + trailing z-scores."""
 
     def __init__(
@@ -51,21 +53,15 @@ class AnomalyZScoreAccumulator:
             )
         self.retention_days = retention_days
         self.totals: dict[str, dict[dt.date, int]] = defaultdict(dict)
-        self.last_batch_id: int | None = None
+        super().__init__(None)
 
     # -- streaming side -----------------------------------------------------
 
     def add_batch(self, batch_events: DataFrame, batch_id: int | None = None) -> None:
         """foreachBatch hook: one exact batch-sized aggregation, additive
         merge driver-side, replay-idempotent by batch id."""
-        # Transactional fold ordering (T6, the streaming/cep.py
-        # discipline): replay guard CHECKED here, batch id COMMITTED only
-        # after the fold succeeds — a batch whose Spark job fails and is
-        # retried under the same epoch id re-folds instead of being
-        # misclassified as a replay.
-        if batch_id is not None:
-            if self.last_batch_id is not None and batch_id <= self.last_batch_id:
-                return
+        if self._replayed(batch_events.sparkSession, batch_id):
+            return  # replay of a committed batch — already folded
         rows = (
             batch_events.select(
                 "event_type",
@@ -88,8 +84,7 @@ class AnomalyZScoreAccumulator:
             self._evict(series)
 
         self.totals = totals
-        if batch_id is not None:
-            self.last_batch_id = int(batch_id)
+        self._commit(batch_id)
 
     def _evict(self, series: dict) -> None:
         if self.retention_days is None:
@@ -97,14 +92,6 @@ class AnomalyZScoreAccumulator:
         horizon = max(series) - dt.timedelta(days=self.retention_days - 1)
         for day in [d for d in series if d < horizon]:
             del series[day]
-
-    def attach(self, stream_events: DataFrame, **start_kwargs):
-        """Wire onto a streaming DataFrame via foreachBatch and start."""
-        return (
-            stream_events.writeStream.outputMode("append")
-            .foreachBatch(lambda batch, bid: self.add_batch(batch, bid))
-            .start(**start_kwargs)
-        )
 
     # -- query side ---------------------------------------------------------
 

@@ -90,8 +90,8 @@ _QTAIL_SCHEMA = StructType(
 
 class _BaseCepAccumulator(DurableFold):
     """Shared fold machinery: tail re-injection, kernel dispatch and
-    retention over the durable fold. Subclasses set ``_STATE`` (the
-    ``tails`` relation; schema field 0 is user_id, field 1 the
+    retention over the durable fold. Subclasses set ``_TAILS`` (the
+    ``tails`` relation's schema; field 0 is user_id, field 1 the
     event-time micros), ``_match_fields`` (emission tuple shape) and
     implement ``_kernel(batch) -> (matches_df, tails_df)``.
 
@@ -103,6 +103,8 @@ class _BaseCepAccumulator(DurableFold):
     broadcast semi join (the data_quality.py seen-relation discipline);
     driver transfer per batch is the finalized matches only."""
 
+    _STATE = {"tails": ["user_id"]}
+    _TAILS: StructType
     _match_fields: tuple[str, ...]
 
     def __init__(
@@ -144,7 +146,7 @@ class _BaseCepAccumulator(DurableFold):
         return out
 
     def _tail_fields(self) -> list[str]:
-        return [f.name for f in self._STATE["tails"][0].fields[1:]]
+        return [f.name for f in self._TAILS.fields[1:]]
 
     def _on_restore(self, spark: SparkSession, extra: dict) -> None:
         if self.tails_rel is not None:
@@ -280,7 +282,7 @@ class _BaseCepAccumulator(DurableFold):
                 kept.unionByName(stamped).coalesce(width)
             )
         touched = users_df if idle_df is None else users_df.unionByName(idle_df)
-        self._commit(spark, batch_id, {"tails": new_tails}, {"tails": touched})
+        self._commit(batch_id, {"tails": new_tails}, {"tails": touched})
         self.active_rel = new_active
         return matches
 
@@ -357,7 +359,7 @@ class CepAccumulator(_BaseCepAccumulator):
     """Incremental STRICT-contiguity greedy matching: pending state is
     ≤ L-1 unconsumed trailing rows per key, WITHIN-aged (exact)."""
 
-    _STATE = {"tails": (_TAIL_SCHEMA, ["user_id"])}
+    _TAILS = _TAIL_SCHEMA
     _match_fields = (
         "user_id",
         "start_event_id",
@@ -396,7 +398,7 @@ class RelaxedCepAccumulator(_BaseCepAccumulator):
     stay correct for future non-monotone pattern extensions where
     blocked-valid chains become possible."""
 
-    _STATE = {"tails": (_TAIL_SCHEMA, ["user_id"])}
+    _TAILS = _TAIL_SCHEMA
     _match_fields = (
         "user_id",
         "start_event_id",
@@ -502,7 +504,7 @@ class RelaxedCepAccumulator(_BaseCepAccumulator):
         else:
             reported = [tuple(r) for r in relabeled.collect()]
         self._save_state(
-            spark, self.last_batch_id, self.n_batches,
+            self.last_batch_id, self.n_batches,
             {"tails": None}, {"tails": None},
         )
         self.tails_rel = None
@@ -516,7 +518,7 @@ class QuantifiedCepAccumulator(_BaseCepAccumulator):
     streaming CEP trio. Completed matches are closed by their C row, so
     every emission is final and no flush step exists."""
 
-    _STATE = {"tails": (_QTAIL_SCHEMA, ["user_id"])}
+    _TAILS = _QTAIL_SCHEMA
     _match_fields = (
         "user_id",
         "start_event_id",
@@ -587,7 +589,7 @@ class QuantifiedCepAccumulator(_BaseCepAccumulator):
         else:
             reported = [tuple(r) for r in pend.collect()]
         self._save_state(
-            spark, self.last_batch_id, self.n_batches,
+            self.last_batch_id, self.n_batches,
             {"tails": None}, {"tails": None},
         )
         self.tails_rel = None

@@ -17,11 +17,15 @@ only O(1) rows (scalar aggregates):
   state discipline in ``streaming/incremental.py``): the batch's
   per-key counts left-join the seen relation and one SUM scalar yields
   the batch's duplicate count; the seen relation then absorbs the
-  batch's keys via a shuffle-free append. Since round 12 the durable
-  save is also incremental: the relation is bucket-partitioned and a
-  batch rewrites only the buckets its NEW keys hash into
-  (``state_store.py`` BucketedState); driver memory is O(1) regardless
-  of corpus volume — the round-10 unbounded driver seen-set is gone.
+  batch's keys via a shuffle-free append. Driver memory is O(1)
+  regardless of corpus volume — the round-10 unbounded driver seen-set
+  is gone.
+
+Durability, replay guard and fold-then-commit (T6) follow the one
+durable-fold protocol,
+:class:`~flink_streaming_etl_spark.streaming.state_store.DurableFold`:
+the seen relation saves bucketed, a batch rewriting only the buckets
+its NEW keys hash into, and the counters ride in the meta.
 
 NULL-key semantics match the batch operator exactly (ADVICE r10): the
 batch computes ``n_rows − count_distinct(o_orderkey)`` and
@@ -32,7 +36,6 @@ the additive agg and never enter the seen relation.
 Equality pin (tests/test_round10.py, test_round11.py): after any batch
 split of the orders table, ``result()`` equals the batch operator on
 the replayed union — including NULL keys and cross-batch duplicates.
-Replays are idempotent by batch id.
 """
 
 from __future__ import annotations
@@ -43,10 +46,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_streaming_etl_spark.operators.analytics import DQ_ALLOWED_STATUS
+from flink_streaming_etl_spark.streaming.state_store import DurableFold
 
 
-class DataQualityAccumulator:
+class DataQualityAccumulator(DurableFold):
     """Incremental constraint-violation counting over an append stream."""
+
+    #: ``_seen``: distinct non-null o_orderkey values seen so far — a
+    #: DISTRIBUTED relation, never collected to the driver
+    _STATE = {"seen": ["o_orderkey"]}
+    _ATTR = "_{}"
+    _BATCH_VERSIONS = True
+    _AVAILABLE_NOW = True
 
     CHECKS = (
         "orderkey_unique",
@@ -57,62 +68,24 @@ class DataQualityAccumulator:
         "status_in_domain",
     )
 
-    def __init__(
-        self,
-        dim_keys: set | None = None,
-        state_dir: str | None = None,
-        state_buckets: int = 64,
-    ):
-        #: bucket count for the durable seen-key relation — corpus-scale,
-        #: saved incrementally (files rewritten ∝ buckets the batch's NEW
-        #: keys hash into; state_store.py)
-        self.state_buckets = int(state_buckets)
+    def __init__(self, dim_keys: set | None = None, state_dir: str | None = None):
         #: customer key set for the referential check (broadcast-sized,
         #: the TTL dimension cache contract; None disables the check)
         self.dim_keys = dim_keys
         self._dim_df: DataFrame | None = None  # built lazily, once
         self.n_rows = 0
         self.violations: dict[str, int] = defaultdict(int)
-        #: distinct non-null o_orderkey values seen so far — a DISTRIBUTED
-        #: relation, never collected to the driver
-        self._seen: DataFrame | None = None
-        self.last_batch_id: int | None = None
-        #: durable state (streaming/state_store.py): the seen-key relation
-        #: plus the scalar counters, saved per folded batch — required
-        #: when the gate runs under a persistent streaming checkpoint (T6)
-        self._store = None
-        if state_dir is not None:
-            from flink_streaming_etl_spark.streaming.state_store import (
-                AccumulatorStateStore,
-            )
+        super().__init__(state_dir)
 
-            self._store = AccumulatorStateStore(state_dir)
-
-    def restore(self, spark: SparkSession) -> bool:
-        """Load the last saved state (True if something was restored)."""
-        if self._store is None:
-            return False
-        loaded = self._store.load(spark)
-        if loaded is None:
-            return False
-        self.last_batch_id, rels, extra = loaded
-        self._seen = rels.get("seen")
+    def _on_restore(self, spark: SparkSession, extra: dict) -> None:
         self.n_rows = int(extra.get("n_rows", 0))
         self.violations = defaultdict(int, {
             k: int(v) for k, v in extra.get("violations", {}).items()
         })
-        return True
 
     def add_batch(self, batch_orders: DataFrame, batch_id: int | None = None) -> None:
-        # Transactional fold ordering (T6, the streaming/cep.py
-        # discipline): replay guard CHECKED here, counters/state/batch id
-        # COMMITTED only after the fold and the durable save succeed — a
-        # mid-fold failure retried under the same epoch id re-folds
-        # cleanly instead of being misclassified as a replay.
-        if batch_id is not None:
-            if self.last_batch_id is not None and batch_id <= self.last_batch_id:
-                return  # replay of a COMMITTED batch — already folded
-
+        if self._replayed(batch_orders.sparkSession, batch_id):
+            return  # replay of a COMMITTED batch — already folded
         agg = batch_orders.agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.when(F.col("o_custkey").isNull(), 1).otherwise(0)).alias("v_null"),
@@ -195,44 +168,16 @@ class DataQualityAccumulator:
             batch_orders.sparkSession.conf.get("spark.sql.shuffle.partitions")
         )
         new_seen = new_seen.coalesce(width).localCheckpoint(eager=True)
-        if self._store is not None and batch_id is not None:
-            from flink_streaming_etl_spark.streaming.state_store import (
-                BucketedState,
-            )
-
-            # corpus-scale relation, incremental save: a batch rewrites
-            # only the buckets its NEW keys hash into (existing keys
-            # don't change the relation, so their buckets are untouched)
-            self._store.save(
-                batch_id,
-                {},
-                extra={"n_rows": new_n_rows,
-                       "violations": dict(viol)},
-                bucketed={
-                    "seen": BucketedState(
-                        new_seen,
-                        key_cols=["o_orderkey"],
-                        n_buckets=self.state_buckets,
-                        touched=touched_keys,
-                    )
-                },
-            )
-        # durable save succeeded — commit memory + batch id
+        # the seen relation changes only by the batch's NEW keys, so only
+        # their buckets are rewritten; the counters commit after the save
+        self._commit(
+            batch_id,
+            {"seen": new_seen},
+            {"seen": touched_keys},
+            extra={"n_rows": new_n_rows, "violations": dict(viol)},
+        )
         self.n_rows = new_n_rows
         self.violations = viol
-        self._seen = new_seen
-        if batch_id is not None:
-            self.last_batch_id = int(batch_id)
-
-    def attach(self, stream_orders: DataFrame, checkpoint_root: str | None = None,
-               **start_kwargs):
-        """Wire onto a streaming orders DataFrame via foreachBatch."""
-        w = stream_orders.writeStream.outputMode("append").foreachBatch(
-            lambda batch, bid: self.add_batch(batch, int(bid))
-        )
-        if checkpoint_root is not None:
-            w = w.option("checkpointLocation", checkpoint_root)
-        return w.trigger(availableNow=True).start(**start_kwargs)
 
     def result(self, spark: SparkSession) -> DataFrame:
         rows = [

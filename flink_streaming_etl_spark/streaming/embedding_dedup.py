@@ -42,14 +42,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    BooleanType,
-    DoubleType,
-    LongType,
-    StructField,
-    StructType,
-)
 
 from flink_streaming_etl_spark.ckpt import eager_checkpoint
 from flink_streaming_etl_spark.functions import q6, vec_dot, vec_norm
@@ -59,31 +51,14 @@ from flink_streaming_etl_spark.operators.similarity import (
 )
 from flink_streaming_etl_spark.streaming.state_store import DurableFold
 
-_VEC_SCHEMA = StructType(
-    [
-        StructField("vec_id", LongType()),
-        StructField("v", ArrayType(DoubleType())),
-        StructField("norm", DoubleType()),
-        StructField("last_seen", LongType()),
-    ]
-)
-
-_KEPT_SCHEMA = StructType(
-    [
-        StructField("vec_id", LongType()),
-        StructField("kept", BooleanType()),
-        StructField("owner", LongType()),
-    ]
-)
-
 
 class EmbeddingNearDupAccumulator(DurableFold):
     """Incremental new-vs-corpus embedding-cosine dedup with
     distributed state."""
 
     _STATE = {
-        "vec": (_VEC_SCHEMA, ["vec_id"]),
-        "kept": (_KEPT_SCHEMA, ["vec_id"]),
+        "vec": ["vec_id"],
+        "kept": ["vec_id"],
     }
 
     def __init__(
@@ -232,7 +207,6 @@ class EmbeddingNearDupAccumulator(DurableFold):
         if evicted is not None:
             touched = touched.unionByName(evicted)
         self._commit(
-            spark,
             batch_id,
             {"vec": new_vec, "kept": new_kept_rel},
             {"vec": touched, "kept": touched},

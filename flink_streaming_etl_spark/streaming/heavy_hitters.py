@@ -33,6 +33,8 @@ from collections import Counter
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flink_streaming_etl_spark.streaming.state_store import DurableFold
+
 TOKEN_SPLIT_RE = r"\s+"
 
 
@@ -42,7 +44,7 @@ def tokens_of(documents: DataFrame) -> DataFrame:
     )
 
 
-class MisraGriesAccumulator:
+class MisraGriesAccumulator(DurableFold):
     """Mergeable MG summary with exact undercount tracking.
 
     ``counts`` holds at most ``cap`` tokens; ``max_undercount`` is the sum
@@ -58,7 +60,7 @@ class MisraGriesAccumulator:
         self.counts: Counter = Counter()
         self.n_total = 0
         self.max_undercount = 0
-        self.last_batch_id: int | None = None
+        super().__init__(None)
 
     # -- streaming side -----------------------------------------------------
 
@@ -117,16 +119,11 @@ class MisraGriesAccumulator:
         replays a micro-batch under the SAME batch_id. Replays are skipped
         (ids are monotonically increasing within a query), so a restart
         cannot double-count into ``counts``/``n_total`` — the idempotent-
-        sink discipline the upsert sinks follow, applied to the summary.
+        sink discipline the upsert sinks follow, applied to the summary
+        (the guard and commit of :class:`DurableFold`, empty ``_STATE``).
         """
-        # Transactional fold ordering (T6, the streaming/cep.py
-        # discipline): replay guard CHECKED here, batch id COMMITTED only
-        # after the fold succeeds — a batch whose Spark job fails and is
-        # retried under the same epoch id re-folds instead of being
-        # misclassified as a replay.
-        if batch_id is not None:
-            if self.last_batch_id is not None and batch_id <= self.last_batch_id:
-                return
+        if self._replayed(batch_documents.sparkSession, batch_id):
+            return  # replay of a committed batch — already folded
         rows = self._summarize_batch(batch_documents)
         # a token tracked by several partition summaries contributes the SUM
         # of its per-partition counts (a dict comprehension would keep one)
@@ -138,8 +135,7 @@ class MisraGriesAccumulator:
         under = sum(r["under"] for r in rows)
         self.add_summary(part_counts, undercount=under, n=n)
 
-        if batch_id is not None:
-            self.last_batch_id = int(batch_id)
+        self._commit(batch_id)
 
     def add_counter(self, batch_counts: Counter) -> None:
         """Merge an EXACT batch counter (no undercount)."""
@@ -169,15 +165,6 @@ class MisraGriesAccumulator:
         self.n_total = n_total
         self.max_undercount = under
         self.counts = merged
-
-    def attach(self, stream_documents: DataFrame, **start_kwargs):
-        """Wire this accumulator onto a streaming DataFrame via foreachBatch
-        and start the query (caller owns the returned StreamingQuery)."""
-        return (
-            stream_documents.writeStream.outputMode("append")
-            .foreachBatch(lambda batch, bid: self.add_batch(batch, bid))
-            .start(**start_kwargs)
-        )
 
     # -- query side ---------------------------------------------------------
 

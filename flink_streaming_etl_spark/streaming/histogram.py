@@ -14,7 +14,9 @@ production percentile path at 100 TB: exact percentiles need a full
 sort/shuffle per query, while the histogram answers p50/p95/p99 to
 bin-width resolution from O(types x bins) standing state.
 
-Replays are idempotent by batch id (the shared accumulator contract).
+Replay guard, commit and attach follow the one durable-fold protocol
+(:class:`~flink_streaming_etl_spark.streaming.state_store.DurableFold`,
+empty ``_STATE``: the summary is bounded driver state).
 """
 
 from __future__ import annotations
@@ -29,26 +31,21 @@ from flink_streaming_etl_spark.operators.analytics import (
     HIST_HI,
     HIST_LO,
 )
+from flink_streaming_etl_spark.streaming.state_store import DurableFold
 
 
-class ValueHistogramAccumulator:
+class ValueHistogramAccumulator(DurableFold):
     """Mergeable per-(event_type, bin) counts with exact batch parity."""
 
     def __init__(self) -> None:
         self.counts: dict[tuple[str, int], int] = defaultdict(int)
-        self.last_batch_id: int | None = None
+        super().__init__(None)
 
     # -- streaming side -----------------------------------------------------
 
     def add_batch(self, batch_events: DataFrame, batch_id: int | None = None) -> None:
-        # Transactional fold ordering (T6, the streaming/cep.py
-        # discipline): replay guard CHECKED here, batch id COMMITTED only
-        # after the fold succeeds — a batch whose Spark job fails and is
-        # retried under the same epoch id re-folds instead of being
-        # misclassified as a replay.
-        if batch_id is not None:
-            if self.last_batch_id is not None and batch_id <= self.last_batch_id:
-                return  # replay — already folded
+        if self._replayed(batch_events.sparkSession, batch_id):
+            return  # replay of a committed batch — already folded
         width = (HIST_HI - HIST_LO) / HIST_BINS
         bin_ = F.least(
             F.lit(HIST_BINS - 1),
@@ -70,15 +67,7 @@ class ValueHistogramAccumulator:
             counts[(r["event_type"], b)] += int(r["n"])
 
         self.counts = counts
-        if batch_id is not None:
-            self.last_batch_id = int(batch_id)
-
-    def attach(self, stream_events: DataFrame, **start_kwargs):
-        return (
-            stream_events.writeStream.outputMode("append")
-            .foreachBatch(lambda batch, bid: self.add_batch(batch, bid))
-            .start(**start_kwargs)
-        )
+        self._commit(batch_id)
 
     # -- query side ---------------------------------------------------------
 

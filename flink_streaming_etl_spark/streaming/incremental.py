@@ -24,6 +24,12 @@ reference's cancellable-orders scenario.
 Money sums accumulate in DECIMAL so +x followed by -x cancels exactly
 (float deltas would drift); counts are exact longs that reach 0 and drop
 the key.
+
+The durable changelog folds here and in topk.py / collect.py
+(:class:`ChangelogFold`) follow the one durable-fold protocol of
+:class:`~flink_streaming_etl_spark.streaming.state_store.DurableFold`:
+``state_dir`` store, batch-id replay guard, idle retention, bucketed
+fold-then-commit saves (T6), ``attach`` onto a changelog stream.
 """
 
 from __future__ import annotations
@@ -32,6 +38,13 @@ from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from flink_streaming_etl_spark.sources.cdc import apply_changelog
+from flink_streaming_etl_spark.streaming.state_store import (
+    DurableFold,
+    all_but,
+    group_match,
+)
 
 DEC = "decimal(18,2)"
 
@@ -61,6 +74,169 @@ def changelog_deltas(chunk: DataFrame, predicate: Callable[[Column], Column] | N
     return out
 
 
+def image_keys(chunk: DataFrame, cols: list[str]) -> DataFrame:
+    """Distinct ``cols`` of either row image of a changelog chunk —
+    batch-bounded (≤ 2 rows per envelope). NULL keys are kept:
+    changelog_deltas already dropped the empty envelope sides, so a
+    remaining NULL is a real NULL key (ADVICE r10)."""
+    return (
+        changelog_deltas(chunk, None)
+        .select(*[F.col(f"img.{c}").alias(c) for c in cols])
+        .distinct()
+    )
+
+
+def sum_count_deltas(
+    rows: DataFrame, keys: dict[str, Column], sign: Column, amount: Column
+) -> DataFrame:
+    """Signed rows → per-key (d_amount, d_cnt) deltas: Σ sign·amount in
+    DECIMAL, Σ sign as a long."""
+    return (
+        rows.select(
+            *[e.alias(n) for n, e in keys.items()],
+            (sign.cast(DEC) * amount.cast(DEC)).alias("_amt"),
+            sign.cast("long").alias("_cnt"),
+        )
+        .groupBy(*keys)
+        .agg(F.sum("_amt").alias("d_amount"), F.sum("_cnt").alias("d_cnt"))
+    )
+
+
+def merge_sum_count(
+    state: DataFrame | None, deltas: DataFrame, keys: list[str]
+) -> DataFrame:
+    """Merge per-key deltas into the (keys, amount, cnt) state with one
+    keyed full-outer join; a key whose count reaches 0 drops."""
+    if state is None:
+        merged = deltas.select(
+            *keys, F.col("d_amount").alias("amount"), F.col("d_cnt").alias("cnt")
+        )
+    else:
+        zero = F.lit(0).cast(DEC)
+        merged = state.join(deltas, on=keys, how="full_outer").select(
+            *keys,
+            (F.coalesce(F.col("amount"), zero)
+             + F.coalesce(F.col("d_amount"), zero)).alias("amount"),
+            (F.coalesce(F.col("cnt"), F.lit(0))
+             + F.coalesce(F.col("d_cnt"), F.lit(0))).alias("cnt"),
+        )
+    # Cut lineage: state is the running accumulator across batches.
+    return merged.filter(F.col("cnt") > 0).localCheckpoint(eager=True)
+
+
+def refresh_groups(
+    rows: DataFrame,
+    old: DataFrame | None,
+    touched: DataFrame,
+    cols: list[str],
+    kernel: Callable[[DataFrame], DataFrame],
+) -> tuple[DataFrame, DataFrame]:
+    """Touched-group refresh: ``kernel`` over the touched groups' slice
+    of ``rows`` (a broadcast semi join on the batch-bounded group keys,
+    null-safe), spliced into the maintained ``old`` relation by
+    anti∪union. Returns (refreshed, new). Expression joins keep the left
+    side's column order, so the result matches a full recompute
+    column-for-column."""
+    slice_ = rows.join(
+        F.broadcast(touched), group_match(rows, touched, cols), "semi"
+    )
+    refreshed = kernel(slice_).localCheckpoint(eager=True)
+    if old is None:
+        return refreshed, refreshed
+    kept = old.join(F.broadcast(touched), group_match(old, touched, cols), "anti")
+    return refreshed, kept.unionByName(refreshed).localCheckpoint(eager=True)
+
+
+class ChangelogFold(DurableFold):
+    """A durable fold over ONE changelog stream (``apply(chunk,
+    batch_id)``), stored under ``state_dir`` with batch-id versions;
+    ``retention_batches`` adds the ``retention_touch`` stamps to the
+    state (T5 — a group idle that many folds leaves state and result
+    together; a reappearing group starts fresh, Flink TTL semantics)."""
+
+    _ATTR = "{}"
+    _BATCH_VERSIONS = True
+    _AVAILABLE_NOW = True
+
+    def __init__(
+        self,
+        state: dict,
+        state_dir: str | None,
+        retention_batches: int | None = None,
+    ):
+        self.retention_batches = retention_batches
+        if retention_batches is not None:
+            state = {**state, "retention_touch": all_but("_last_batch")}
+        self._STATE = state
+        super().__init__(state_dir)
+
+    def _foreach_batch(self, batch: DataFrame, batch_id: int) -> None:
+        self.apply(batch, batch_id=int(batch_id))
+
+
+class GroupRefreshFold(ChangelogFold):
+    """A PK-keyed latest-state table (``state``, apply_changelog —
+    O(live rows), group-partitioned on a cluster) plus a per-group
+    relation ``_RESULT`` that ``_kernel`` derives from it.
+
+    Per-batch WORK is touched-group-bounded, never state-bounded: the
+    batch's images (old and new — an update can move a row across
+    groups) name the groups whose result can change, only those groups'
+    state rows re-run the kernel, and only their rows are re-emitted. A
+    touched group left with no rows vanishes from the result. Saves
+    rewrite the buckets of the chunk's PKs and of the touched groups."""
+
+    _RESULT: str
+
+    def __init__(
+        self,
+        pk: str,
+        group_cols: list[str],
+        state_dir: str | None,
+        retention_batches: int | None,
+    ):
+        self.pk = pk
+        self.group_cols = list(group_cols)
+        super().__init__(
+            {"state": [pk], self._RESULT: self.group_cols},
+            state_dir,
+            retention_batches,
+        )
+
+    def _kernel(self, rows: DataFrame) -> DataFrame:  # pragma: no cover
+        raise NotImplementedError
+
+    def apply(self, chunk: DataFrame, batch_id: int | None = None) -> DataFrame | None:
+        """Fold one micro-batch; return the refreshed rows of the touched
+        groups (None on replay)."""
+        if self._replayed(chunk.sparkSession, batch_id):
+            return None
+        touched = image_keys(chunk, self.group_cols).localCheckpoint(eager=True)
+        new_state = apply_changelog(self.state, chunk, self.pk).localCheckpoint(
+            eager=True
+        )
+        refreshed, new_result = refresh_groups(
+            new_state, self.result(), touched, self.group_cols, self._kernel
+        )
+        self._commit(
+            batch_id,
+            {"state": new_state, self._RESULT: new_result},
+            {"state": image_keys(chunk, [self.pk]), self._RESULT: touched},
+            groups=touched,
+        )
+        return refreshed
+
+    def result(self) -> DataFrame | None:
+        return getattr(self, self._RESULT)
+
+    def recompute(self) -> DataFrame | None:
+        """The kernel over the whole latest state — the always-correct
+        twin the equality pin compares against."""
+        if self.state is None:
+            return None
+        return self._kernel(self.state)
+
+
 class IncrementalSumCount:
     """Exact incremental SUM(amount)/COUNT(*) GROUP BY key_exprs over a
     changelog — the delta-maintained twin of a recompute aggregate.
@@ -82,46 +258,21 @@ class IncrementalSumCount:
 
     def apply(self, chunk: DataFrame) -> DataFrame:
         img = F.col("img")
-        deltas = changelog_deltas(chunk, self.predicate)
-        keys = self.key_exprs(img)
-        key_names = [f"k{i}" for i in range(len(keys))]
-        batch = (
-            deltas.select(
-                *[k.alias(n) for k, n in zip(keys, key_names)],
-                (F.col("sign").cast(DEC) * self.amount(img).cast(DEC)).alias("_amt"),
-                F.col("sign").cast("long").alias("_cnt"),
-            )
-            .groupBy(*key_names)
-            .agg(F.sum("_amt").alias("d_amount"), F.sum("_cnt").alias("d_cnt"))
+        keys = {f"k{i}": k for i, k in enumerate(self.key_exprs(img))}
+        batch = sum_count_deltas(
+            changelog_deltas(chunk, self.predicate),
+            keys,
+            F.col("sign"),
+            self.amount(img),
         )
-        if self.state is None:
-            merged = batch.select(
-                *key_names,
-                F.col("d_amount").alias("amount"),
-                F.col("d_cnt").alias("cnt"),
-            )
-        else:
-            zero_amt = F.lit(0).cast(DEC)
-            merged = (
-                self.state.join(batch, on=key_names, how="full_outer")
-                .select(
-                    *key_names,
-                    (F.coalesce(F.col("amount"), zero_amt)
-                     + F.coalesce(F.col("d_amount"), zero_amt)).alias("amount"),
-                    (F.coalesce(F.col("cnt"), F.lit(0))
-                     + F.coalesce(F.col("d_cnt"), F.lit(0))).alias("cnt"),
-                )
-            )
-        merged = merged.filter(F.col("cnt") > 0)
-        # Cut lineage: state is the running accumulator across batches.
-        self.state = merged.localCheckpoint(eager=True)
+        self.state = merge_sum_count(self.state, batch, list(keys))
         return self.state
 
     def result(self) -> DataFrame | None:
         return self.state
 
 
-class IncrementalDistinctCount:
+class IncrementalDistinctCount(ChangelogFold):
     """Exact incremental COUNT(DISTINCT value) GROUP BY key over a
     changelog — the retraction aggregate Flink singles out as the hard
     case (a plain count can fold ±1s; a DISTINCT count changes only when
@@ -142,9 +293,10 @@ class IncrementalDistinctCount:
       style fold — bounded by touched pairs too.
 
     Same delivery contract as the siblings (per-key exactly-once with
-    faithful before-images); replay-idempotent via batch ids; pinned
-    equal to a full recompute after every changelog prefix in
-    tests/test_round10.py.
+    faithful before-images); durable, replay-idempotent and retention-
+    bounded through :class:`ChangelogFold` (saves rewrite only the
+    buckets of the batch's pairs and groups); pinned equal to a full
+    recompute after every changelog prefix in tests/test_round10.py.
     """
 
     def __init__(
@@ -153,72 +305,22 @@ class IncrementalDistinctCount:
         value: Callable[[Column], Column],
         predicate: Callable[[Column], Column] | None = None,
         state_dir: str | None = None,
-        state_buckets: int = 16,
         retention_batches: int | None = None,
     ):
         self.key_exprs = key_exprs
         self.value = value
         self.predicate = predicate
-        #: idle-state retention (T5, streaming/retention.py): groups
-        #: untouched for this many batches drop their ref-counts and
-        #: distinct count together (Flink TTL semantics — a reappearing
-        #: group starts fresh). Built lazily (key arity is known at the
-        #: first apply).
-        self.retention_batches = retention_batches
-        self._retention = None
-        #: bucket count for the durable ref_state relation — the one
-        #: state tier that grows with the corpus, saved incrementally
-        #: (files rewritten ∝ buckets the batch touched; state_store.py)
-        self.state_buckets = int(state_buckets)
-        #: (k0..kn, v, cnt) reference counts, cnt > 0
-        self.ref_state: DataFrame | None = None
-        #: (k0..kn, distinct_cnt), distinct_cnt > 0
-        self.count_state: DataFrame | None = None
-        self.last_batch_id: int | None = None
-        #: durable state (see streaming/state_store.py) — required when
-        #: attach() uses a persistent checkpointLocation
-        self._store = None
-        if state_dir is not None:
-            from flink_streaming_etl_spark.streaming.state_store import (
-                AccumulatorStateStore,
-            )
-
-            self._store = AccumulatorStateStore(state_dir)
-
-    def restore(self, spark) -> bool:
-        """Load the last saved state (True if something was restored)."""
-        if self._store is None:
-            return False
-        loaded = self._store.load(spark)
-        if loaded is None:
-            return False
-        self.last_batch_id, rels, extra = loaded
-        self.ref_state = rels.get("ref_state")
-        self.count_state = rels.get("count_state")
-        if self.retention_batches is not None and "retention_touch" in rels:
-            from flink_streaming_etl_spark.streaming.retention import (
-                GroupRetention,
-            )
-
-            touch = rels["retention_touch"]
-            key_names = [c for c in touch.columns if c != "_last_batch"]
-            self._retention = GroupRetention(key_names, self.retention_batches)
-            self._retention.restore(rels, extra)
-        return True
+        #: ``ref_state``: (k0..kn, v, cnt) reference counts, cnt > 0;
+        #: ``count_state``: (k0..kn, distinct_cnt), distinct_cnt > 0
+        super().__init__(
+            {"ref_state": all_but("cnt"), "count_state": all_but("distinct_cnt")},
+            state_dir,
+            retention_batches,
+        )
 
     def apply(self, chunk: DataFrame, batch_id: int | None = None) -> DataFrame | None:
-        # Transactional fold ordering (T6, the streaming/cep.py
-        # discipline): the replay guard is CHECKED here, but the batch id
-        # and the state references are COMMITTED only after the fold and
-        # the durable save succeed — a batch that fails mid-fold and is
-        # retried under the same epoch id re-folds cleanly instead of
-        # being misclassified as an already-seen replay. The retention
-        # clock is the one best-effort exception (a retried batch may
-        # tick it twice, shortening an idle key's grace by one fold).
-        if batch_id is not None:
-            if self.last_batch_id is not None and batch_id <= self.last_batch_id:
-                return None
-
+        if self._replayed(chunk.sparkSession, batch_id):
+            return None
         img = F.col("img")
         deltas = changelog_deltas(chunk, self.predicate)
         keys = self.key_exprs(img)
@@ -296,80 +398,16 @@ class IncrementalDistinctCount:
         new_count = (
             counts.filter(F.col("distinct_cnt") > 0).localCheckpoint(eager=True)
         )
-        evicted_pairs = None
-        if self.retention_batches is not None:
-            from flink_streaming_etl_spark.streaming.retention import (
-                GroupRetention,
-                evict,
-            )
-
-            if self._retention is None:
-                self._retention = GroupRetention(key_names, self.retention_batches)
-            idle = self._retention.tick(batch.select(*key_names).distinct())
-            if idle is not None:
-                # the evicted pairs live in buckets this batch may NOT
-                # have touched — capture them BEFORE eviction so the
-                # durable save below rewrites their buckets too (else a
-                # restore would resurrect evicted state from stale
-                # bucket files)
-                from flink_streaming_etl_spark.streaming.retention import (
-                    group_match,
-                )
-
-                evicted_pairs = (
-                    new_ref.join(
-                        F.broadcast(idle),
-                        group_match(new_ref, idle, key_names),
-                        "semi",
-                    )
-                    .select(*pair_names)
-                    .localCheckpoint(eager=True)
-                )
-                new_ref = evict(new_ref, idle, key_names)
-                new_count = evict(new_count, idle, key_names)
-        if self._store is not None and batch_id is not None:
-            from flink_streaming_etl_spark.streaming.state_store import (
-                BucketedState,
-            )
-
-            # count_state is group-bounded (small) — plain full rewrite;
-            # ref_state grows with the corpus — save only the buckets
-            # this batch's pairs hash into (state_store.py)
-            rels = {"count_state": new_count}
-            extra = None
-            if self._retention is not None:
-                rels.update(self._retention.relations())
-                extra = self._retention.extra()
-            self._store.save(
-                batch_id,
-                rels,
-                extra=extra,
-                bucketed={
-                    "ref_state": BucketedState(
-                        new_ref,
-                        key_cols=pair_names,
-                        n_buckets=self.state_buckets,
-                        touched=(
-                            batch.select(*pair_names)
-                            if evicted_pairs is None
-                            else batch.select(*pair_names).unionByName(
-                                evicted_pairs
-                            )
-                        ),
-                    )
-                },
-            )
-        # durable save succeeded — commit memory + batch id (fold-then-commit)
-        self.ref_state = new_ref
-        self.count_state = new_count
-        if batch_id is not None:
-            self.last_batch_id = int(batch_id)
-        return new_count
-
-    def attach(self, stream: DataFrame, checkpoint_root: str | None = None, **kw):
-        """Run this accumulator over a changelog stream (see
-        attach_changelog_stream)."""
-        return attach_changelog_stream(self, stream, checkpoint_root, **kw)
+        self._commit(
+            batch_id,
+            {"ref_state": new_ref, "count_state": new_count},
+            {
+                "ref_state": batch.select(*pair_names),
+                "count_state": batch.select(*key_names),
+            },
+            groups=batch.select(*key_names).distinct(),
+        )
+        return self.count_state
 
     def result(self) -> DataFrame | None:
         return self.count_state
@@ -384,20 +422,3 @@ class IncrementalDistinctCount:
         return self.ref_state.groupBy(*key_names).agg(
             F.count_distinct(F.col("v")).alias("distinct_cnt")
         )
-
-
-def attach_changelog_stream(acc, stream: DataFrame, checkpoint_root: str | None = None, **start_kwargs):
-    """Wire ONE changelog stream into an accumulator exposing
-    ``apply(chunk, batch_id)`` via foreachBatch and start it
-    (availableNow). foreachBatch is at-least-once, so the accumulator's
-    own batch-id guard makes restart replays no-ops (T6) — same
-    discipline as IncrementalJoin.attach, minus the two-sided lock (one
-    stream, one writer)."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        acc.apply(batch_df, batch_id=int(batch_id))
-
-    w = stream.writeStream.foreachBatch(process)
-    if checkpoint_root is not None:
-        w = w.option("checkpointLocation", checkpoint_root)
-    return w.trigger(availableNow=True).start(**start_kwargs)

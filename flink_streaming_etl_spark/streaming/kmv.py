@@ -17,7 +17,9 @@ What the streaming twin deliberately does NOT carry: the batch report's
 ``exact_distinct``/``rel_error`` gauge columns (exact distinct needs
 full per-term state — the very thing the sketch replaces at 100 TB).
 
-Replays are idempotent by batch id (the shared accumulator contract).
+Replay guard, commit and attach follow the one durable-fold protocol
+(:class:`~flink_streaming_etl_spark.streaming.state_store.DurableFold`,
+empty ``_STATE``: the summary is bounded driver state).
 """
 
 from __future__ import annotations
@@ -26,30 +28,25 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_streaming_etl_spark.operators.text import _KMV_HASH_BITS, KMV_K
+from flink_streaming_etl_spark.streaming.state_store import DurableFold
 
 
-class KmvDistinctAccumulator:
+class KmvDistinctAccumulator(DurableFold):
     """Mergeable per-source k-min hash sets with batch-exact estimates."""
 
     def __init__(self, k: int = KMV_K):
         self.k = k
         #: source -> ascending list of the k smallest hashes seen
         self.kmin: dict[str, list[int]] = {}
-        self.last_batch_id: int | None = None
+        super().__init__(None)
 
     # -- streaming side -----------------------------------------------------
 
     def add_batch(
         self, batch_documents: DataFrame, batch_id: int | None = None
     ) -> None:
-        # Transactional fold ordering (T6, the streaming/cep.py
-        # discipline): replay guard CHECKED here, batch id COMMITTED only
-        # after the fold succeeds — a batch whose Spark job fails and is
-        # retried under the same epoch id re-folds instead of being
-        # misclassified as a replay.
-        if batch_id is not None:
-            if self.last_batch_id is not None and batch_id <= self.last_batch_id:
-                return  # replay — already folded
+        if self._replayed(batch_documents.sparkSession, batch_id):
+            return  # replay of a committed batch — already folded
         from pyspark.sql.window import Window
 
         from flink_streaming_etl_spark.functions import md5_int
@@ -85,15 +82,7 @@ class KmvDistinctAccumulator:
             kmin[src] = merged[: self.k]
 
         self.kmin = kmin
-        if batch_id is not None:
-            self.last_batch_id = int(batch_id)
-
-    def attach(self, stream_documents: DataFrame, **start_kwargs):
-        return (
-            stream_documents.writeStream.outputMode("append")
-            .foreachBatch(lambda batch, bid: self.add_batch(batch, bid))
-            .start(**start_kwargs)
-        )
+        self._commit(batch_id)
 
     # -- query side ---------------------------------------------------------
 

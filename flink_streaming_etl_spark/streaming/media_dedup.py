@@ -89,8 +89,8 @@ class MediaChunkDedupAccumulator(DurableFold):
     #: hot); ``pairs_rel``: (a_id, b_id, shared_chunks), a_id < b_id —
     #: DISTRIBUTED
     _STATE = {
-        "owner": (_OWNER_SCHEMA, ["chash"]),
-        "pairs": (_PAIR_SCHEMA, ["a_id", "b_id"]),
+        "owner": ["chash"],
+        "pairs": ["a_id", "b_id"],
     }
 
     def __init__(
@@ -262,7 +262,6 @@ class MediaChunkDedupAccumulator(DurableFold):
         new_owner = eager_checkpoint(new_owner.coalesce(width))
 
         self._commit(
-            spark,
             batch_id,
             {"owner": new_owner, "pairs": new_pairs_rel},
             {"owner": touched_chashes, "pairs": new_pairs.select("a_id", "b_id")},

@@ -48,14 +48,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    BooleanType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from flink_streaming_etl_spark.ckpt import eager_checkpoint
 from flink_streaming_etl_spark.operators.dedup import (
@@ -65,29 +57,6 @@ from flink_streaming_etl_spark.operators.dedup import (
 )
 from flink_streaming_etl_spark.functions import q6
 from flink_streaming_etl_spark.streaming.state_store import DurableFold
-
-_BAND_SCHEMA = StructType(
-    [
-        StructField("band_key", StringType()),
-        StructField("doc_id", LongType()),
-        StructField("last_seen", LongType()),
-    ]
-)
-
-_SH_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("sh", ArrayType(LongType())),
-    ]
-)
-
-_KEPT_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("kept", BooleanType()),
-        StructField("owner", LongType()),
-    ]
-)
 
 
 def _banded(documents: DataFrame) -> DataFrame:
@@ -128,9 +97,9 @@ class MinHashNearDupAccumulator(DurableFold):
     distributed state."""
 
     _STATE = {
-        "band": (_BAND_SCHEMA, ["band_key"]),
-        "sh": (_SH_SCHEMA, ["doc_id"]),
-        "kept": (_KEPT_SCHEMA, ["doc_id"]),
+        "band": ["band_key"],
+        "sh": ["doc_id"],
+        "kept": ["doc_id"],
     }
 
     def __init__(
@@ -290,7 +259,6 @@ class MinHashNearDupAccumulator(DurableFold):
         if evicted_docs is not None:
             touched_docs = touched_docs.unionByName(evicted_docs)
         self._commit(
-            spark,
             batch_id,
             {"band": new_band, "sh": new_sh, "kept": new_kept_rel},
             {"band": touched_bands, "sh": touched_docs, "kept": touched_docs},

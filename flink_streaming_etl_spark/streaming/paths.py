@@ -46,7 +46,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 from pyspark.sql.types import (
-    ArrayType,
     LongType,
     StringType,
     StructField,
@@ -60,14 +59,6 @@ from flink_streaming_etl_spark.operators.analytics import (
 )
 from flink_streaming_etl_spark.streaming.state_store import DurableFold
 
-_OPEN_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("types", ArrayType(StringType())),
-        StructField("last_us", LongType()),
-        StructField("_last_fold", LongType()),
-    ]
-)
 
 _COUNTS_SCHEMA = StructType(
     [
@@ -87,8 +78,8 @@ class EventPathAccumulator(DurableFold):
     #: diagnostic ``counts`` accessor and ``top_paths(k)``. A save
     #: rewrites only the buckets of paths the batch closed.
     _STATE = {
-        "open": (_OPEN_SCHEMA, ["user_id"]),
-        "counts": (_COUNTS_SCHEMA, ["path"]),
+        "open": ["user_id"],
+        "counts": ["path"],
     }
 
     def __init__(
@@ -278,7 +269,6 @@ class EventPathAccumulator(DurableFold):
         new_counts = eager_checkpoint(new_counts.coalesce(width))
         self._evict()
         self._commit(
-            spark,
             batch_id,
             {"open": new_open, "counts": new_counts},
             {"open": users_df, "counts": closed_agg.select("path")},

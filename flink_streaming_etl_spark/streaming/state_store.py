@@ -1,6 +1,5 @@
-"""Durable accumulator state: parquet-backed save/restore for the
-streaming accumulators, and the one durable-fold protocol that the
-relation-side accumulators share.
+"""Durable accumulator state: parquet-backed save/restore, and the one
+durable-fold protocol every streaming accumulator shares.
 
 Why: the accumulators keep their state as localCheckpoint'd DataFrames —
 session-local. With a PERSISTENT Structured Streaming checkpoint, a
@@ -10,30 +9,49 @@ the NEW batches onto nothing — wrong answers, not a crash. Durable state
 must therefore travel WITH the streaming checkpoint: save after every
 folded batch, restore before re-attach.
 
-Durable-fold protocol (:class:`DurableFold`). The relation-side
-accumulators (text, media, MinHash and embedding dedup, event paths and
-transitions, the CEP matchers) declare their state once, as ``_STATE``:
-name → (schema, key columns), each relation held in ``<name>_rel``.
+Durable-fold protocol (:class:`DurableFold`). Every accumulator under
+``streaming/`` except ``rules.py`` is one: the relation-side dedup folds
+(text, media, MinHash, embedding), event paths and transitions, the CEP
+matchers, the ±delta changelog folds (``IncrementalDistinctCount``,
+``IncrementalTopK``, ``IncrementalCollect``), the data-quality gate, the
+incremental join and its two compositions (``IncrementalJoinAgg``,
+``IncrementalJoinCollect``), and the driver-side sketches (anomaly,
+heavy hitters, histogram, KMV — empty ``_STATE``, no store). Each
+declares its state once, as ``_STATE``: relation name → bucket key
+columns, each relation held in the attribute ``_ATTR.format(name)``.
 The base class owns everything else:
 
-- a store under ``store_root``, restored when ``spark`` is given, else
-  lazily on the first fold;
+- a store under ``store_root``, restored by :meth:`DurableFold.restore`
+  (at construction when ``spark`` is given), else lazily on the first
+  fold;
 - the replay guard: a batch id at or below ``last_batch_id`` is a replay
   of a committed batch and folds nothing;
+- idle-state retention (T5, Flink's state TTL) as one fold step: with
+  ``retention_batches`` set, a fold that names its touched groups
+  stamps them in the ``retention_touch`` relation with the committed
+  fold clock ``n_batches``; groups idle past the horizon leave every
+  state relation, their keys join the touched set (so their buckets are
+  rewritten and a restore cannot resurrect them), and a group that
+  reappears starts fresh;
 - fold-then-commit (T6): a fold builds its new relations in locals; the
   durable save runs next (every relation bucketed on its keys into
   ``_N_BUCKETS`` buckets, only the buckets of the fold's touched keys
-  rewritten, an empty frame of the schema standing in for absent state),
-  then ``<name>_rel``, ``n_batches`` and ``last_batch_id`` commit. A
-  fold or save that fails leaves memory and store at the previous batch,
-  so a same-epoch retry re-folds instead of being skipped as a replay;
-  a crash between save and commit restores the saved state on restart;
-- a store version counter (``_save_seq``) apart from batch ids, so a
-  save that is not a fold (CEP's flush) gets a fresh version directory;
-- ``attach``: foreachBatch onto ``add_batch``.
+  rewritten; a relation the fold did not touch keeps its buckets), then
+  the relations, ``n_batches`` and ``last_batch_id`` commit. A fold or
+  save that fails leaves memory, store, retention stamps and clock at
+  the previous batch, so a same-epoch retry re-folds instead of being
+  skipped as a replay; a crash between save and commit restores the
+  saved state on restart;
+- store versions: a save counter (``_save_seq``), or the fold's batch id
+  for the ``_BATCH_VERSIONS`` families (whose folds without an id are
+  then not saved);
+- ``attach``: foreachBatch onto the fold (``availableNow`` for the
+  ``_AVAILABLE_NOW`` families); the joins wire two streams with durable
+  per-side guards.
 
 Meta ``extra`` holds ``last_batch_id`` and ``n_batches`` plus whatever
-the fold passes (the transitions' ``counts`` matrix).
+the fold passes (the transitions' ``counts`` matrix, the data-quality
+counters, the joins' per-side guards).
 
 Layout (one root per accumulator):
 
@@ -51,31 +69,45 @@ targets an object store / DBFS path; a transactional table format
 (Delta/Iceberg) would subsume the manual version flip, but the two-phase
 "data then pointer" shape is the same.
 
-Save cost: a PLAIN relation is rewritten wholesale per batch — fine for
-k-bounded or group-bounded state (top-k buffers, per-group counts). For
-state that grows with the CORPUS (IncrementalDistinctCount's live-pair
-reference counts), pass it as a :class:`BucketedState` instead: the
-relation is hash-partitioned on its key into ``n_buckets`` stable
-buckets, and a save rewrites ONLY the buckets the batch touched —
+Save cost: a bucketed relation is hash-partitioned on its keys into
+stable buckets, and a save rewrites ONLY the buckets the batch touched —
 meta.json keeps, per bucket, a pointer to the version directory that
-owns its current bytes (Flink's incremental RocksDB checkpoints make
-the same trade: per-batch upload ∝ changed SSTs, not total state).
-Untouched buckets are never read or written; files-rewritten ∝ touched
-buckets is pinned in tests/test_round11.py.
+owns its current bytes (Flink's incremental RocksDB checkpoints make the
+same trade: per-batch upload ∝ changed SSTs, not total state). Untouched
+buckets are never read or written; files-rewritten ∝ touched buckets is
+pinned in tests/test_round11.py and tests/test_round12.py.
 """
 
 from __future__ import annotations
 
 import json
+import logging
 import os
 import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+
+log = logging.getLogger(__name__)
 
 #: bucket-map value marking a touched bucket that ended the batch empty
 _EMPTY = "empty"
+
+
+def group_match(left: DataFrame, right: DataFrame, cols: list[str]):
+    """Null-safe group-key equality (a NULL group is a real group)."""
+    cond = None
+    for c in cols:
+        e = left[c].eqNullSafe(right[c])
+        cond = e if cond is None else cond & e
+    return cond
+
+
+def all_but(col: str) -> Callable[[DataFrame], list[str]]:
+    """Bucket keys of a relation keyed by every column except ``col``
+    (its measure), for relations whose columns a fold decides."""
+    return lambda df: [c for c in df.columns if c != col]
 
 
 class BucketedState:
@@ -121,8 +153,12 @@ class AccumulatorStateStore:
                 for name, info in meta.get("bucketed", {}).items():
                     self._bucket_map[name] = dict(info["map"])
                     self._n_buckets[name] = int(info["n_buckets"])
-            except (OSError, ValueError, KeyError):
-                pass  # unreadable meta behaves like a fresh root
+            except (OSError, ValueError, KeyError) as e:
+                # the first save rewrites the meta from this handle's view
+                log.warning(
+                    "unreadable state meta %s (%s); starting from a fresh root",
+                    self._meta_path(), e,
+                )
 
     def _meta_path(self) -> str:
         return os.path.join(self.root, "meta.json")
@@ -163,21 +199,24 @@ class AccumulatorStateStore:
         self._prune(batch_id)
 
     def _save_bucketed(self, name: str, spec: BucketedState, batch_id: int) -> None:
-        bexpr = spec.bucket_expr()
         if spec.touched is None:
             touched = list(range(spec.n_buckets))
         else:
             # ≤ n_buckets rows cross to the driver — bucket ids, never keys
             touched = sorted(
                 r["b"]
-                for r in spec.touched.select(bexpr.alias("b")).distinct().collect()
+                for r in spec.touched.select(spec.bucket_expr().alias("b"))
+                .distinct()
+                .collect()
             )
         out = os.path.join(self.root, f"{name}.buckets", f"v{batch_id}")
+        # a failed earlier save under this version may have left buckets
+        shutil.rmtree(out, ignore_errors=True)
         if spec.df is not None and touched:
             # ONE write job; hive-partitioned so only the touched buckets'
             # files materialize, one leaf dir per non-empty touched bucket
             (
-                spec.df.withColumn("_bucket", bexpr)
+                spec.df.withColumn("_bucket", spec.bucket_expr())
                 .filter(F.col("_bucket").isin([int(b) for b in touched]))
                 .write.mode("overwrite")
                 .partitionBy("_bucket")
@@ -244,42 +283,66 @@ class AccumulatorStateStore:
         return bid, rels, meta.get("extra", {})
 
 
+
+
 class DurableFold:
-    """Base of the relation-side accumulators: store, restore, replay
-    guard, bucketed save and commit (see the module docstring).
-    Subclasses declare ``_STATE`` and implement ``add_batch``."""
+    """Base of every streaming accumulator: store, restore, replay
+    guard, idle retention, bucketed save, commit and attach (see the
+    module docstring). Subclasses declare ``_STATE`` and fold."""
 
     _N_BUCKETS = 64
-    #: state relation name → (schema, bucket key columns); the relation
-    #: lives in ``<name>_rel``
-    _STATE: dict[str, tuple[StructType, list[str]]] = {}
+    #: state relation name → its bucket key columns, or a callable that
+    #: derives them from the relation (see :func:`all_but`)
+    _STATE: dict[str, list[str] | Callable[[DataFrame], list[str]]] = {}
+    #: the attribute holding relation ``name``
+    _ATTR = "{}_rel"
+    #: store versions are the folds' batch ids instead of a save counter
+    _BATCH_VERSIONS = False
+    #: ``attach`` drains what is available and stops (availableNow)
+    _AVAILABLE_NOW = False
+    #: idle-state retention horizon in folds; None keeps every group
+    retention_batches: int | None = None
+    n_batches = 0
+    last_batch_id: int | None = None
 
-    def __init__(self, store_root: str | None, spark: SparkSession | None):
+    def __init__(self, store_root: str | None, spark: SparkSession | None = None):
         for name in self._STATE:
-            setattr(self, f"{name}_rel", None)
-        self.n_batches = 0
-        self.last_batch_id: int | None = None
+            # a relation already reachable (a composed join's) stays as is
+            if not hasattr(self, self._ATTR.format(name)):
+                setattr(self, self._ATTR.format(name), None)
         self._save_seq = 0
         self.store = (
             AccumulatorStateStore(store_root) if store_root is not None else None
         )
         self._restored = self.store is None
         if self.store is not None and spark is not None:
-            self._restore(spark)
+            self.restore(spark)
 
-    def _restore(self, spark: SparkSession) -> None:
+    @property
+    def _store(self) -> AccumulatorStateStore | None:
+        """The store under its older name (``state_dir`` families)."""
+        return self.store
+
+    @property
+    def _retention(self) -> DurableFold | None:
+        """Holder of the retention clock (``n_batches``): the fold itself
+        when retention is on."""
+        return None if self.retention_batches is None else self
+
+    def restore(self, spark: SparkSession) -> bool:
+        """Load the last saved state; True if something was restored."""
         self._restored = True
-        loaded = self.store.load(spark)
+        loaded = None if self.store is None else self.store.load(spark)
         if loaded is None:
-            return
+            return False
         bid, rels, extra = loaded
         self._save_seq = bid
         self.last_batch_id = extra.get("last_batch_id", bid)
         self.n_batches = int(extra.get("n_batches", 0))
         for name in self._STATE:
-            if name in rels:
-                setattr(self, f"{name}_rel", rels[name])
+            setattr(self, self._ATTR.format(name), rels.get(name))
         self._on_restore(spark, extra)
+        return True
 
     def _on_restore(self, spark: SparkSession, extra: dict) -> None:
         """Rebuild state kept outside ``_STATE`` from a restored store."""
@@ -288,72 +351,122 @@ class DurableFold:
         """Restore if still pending; True when ``batch_id`` is already
         committed (the fold must then do nothing)."""
         if not self._restored:
-            self._restore(spark)
+            self.restore(spark)
         return (
             batch_id is not None
             and self.last_batch_id is not None
             and batch_id <= self.last_batch_id
         )
 
+    def _retain(self, groups: DataFrame, n: int, state: dict, touched: dict) -> None:
+        """The retention step of fold ``n``: stamp ``groups`` (the fold's
+        touched group keys) and evict the groups idle past the horizon
+        from every relation of ``state``, adding their keys to
+        ``touched``. Works on the fold's locals, so it commits with them."""
+        cols = groups.columns
+        stamps = getattr(self, self._ATTR.format("retention_touch"))
+        marked = groups.withColumn("_last_batch", F.lit(n))
+        if stamps is not None:
+            marked = stamps.join(
+                groups, group_match(stamps, groups, cols), "anti"
+            ).unionByName(marked)
+        stamps = marked.localCheckpoint(eager=True)
+        state["retention_touch"], touched["retention_touch"] = stamps, groups
+        horizon = n - self.retention_batches
+        if horizon <= 0:
+            return
+        idle = stamps.filter(F.col("_last_batch") <= horizon).select(*cols)
+        if not idle.take(1):  # group-bounded relation, cheap action
+            return
+        idle = idle.localCheckpoint(eager=True)
+        for name, rel in state.items():
+            if name == "retention_touch" or rel is None:
+                continue
+            on = group_match(rel, idle, cols)
+            gone = rel.join(F.broadcast(idle), on, "semi")
+            touched[name] = touched[name].unionByName(
+                gone.select(*self._keys(name, rel))
+            )
+            state[name] = rel.join(F.broadcast(idle), on, "anti").localCheckpoint(
+                eager=True
+            )
+        state["retention_touch"] = stamps.filter(
+            F.col("_last_batch") > horizon
+        ).localCheckpoint(eager=True)
+        touched["retention_touch"] = groups.unionByName(idle)
+
+    def _keys(self, name: str, rel: DataFrame | None) -> list[str]:
+        keys = self._STATE[name]
+        if not callable(keys):
+            return keys
+        return [] if rel is None else keys(rel)
+
     def _save_state(
         self,
-        spark: SparkSession,
         last_bid: int | None,
         n_batches: int,
         state: dict[str, DataFrame | None],
         touched: dict[str, DataFrame | None],
         extra: dict | None = None,
     ) -> None:
-        """Save ``state`` under a fresh store version; a relation whose
-        ``touched`` keys are None is written in full."""
+        """Save the ``touched`` relations of ``state`` under a fresh store
+        version: only their touched keys' buckets are rewritten (all of
+        them when the touched keys are None); the other relations keep
+        their buckets."""
         if self.store is None:
             return
-        seq = self._save_seq + 1
+        seq = last_bid if self._BATCH_VERSIONS else self._save_seq + 1
+        bucketed = {
+            name: BucketedState(
+                state[name],
+                self._keys(name, t if state[name] is None else state[name]),
+                n_buckets=self._N_BUCKETS,
+                touched=t,
+            )
+            for name, t in touched.items()
+        }
         self.store.save(
             seq,
             {},
-            extra={
-                "last_batch_id": last_bid,
-                "n_batches": n_batches,
-                **(extra or {}),
-            },
-            bucketed={
-                name: BucketedState(
-                    state[name]
-                    if state[name] is not None
-                    else spark.createDataFrame([], schema),
-                    keys,
-                    n_buckets=self._N_BUCKETS,
-                    touched=touched[name],
-                )
-                for name, (schema, keys) in self._STATE.items()
-            },
+            extra={"last_batch_id": last_bid, "n_batches": n_batches, **(extra or {})},
+            bucketed=bucketed,
         )
         self._save_seq = seq
 
     def _commit(
         self,
-        spark: SparkSession,
         batch_id: int | None,
-        state: dict[str, DataFrame],
-        touched: dict[str, DataFrame],
+        state: dict[str, DataFrame | None] | None = None,
+        touched: dict[str, DataFrame | None] | None = None,
         extra: dict | None = None,
+        groups: DataFrame | None = None,
     ) -> None:
-        """Save the folded relations (when the batch has an id), then
-        commit them with ``n_batches`` and ``last_batch_id``."""
+        """Run the retention step over ``groups`` (when retention is on),
+        save the fold's relations, then commit them with ``n_batches``
+        and ``last_batch_id``."""
+        state, touched = dict(state or {}), dict(touched or {})
         n = self.n_batches + 1
-        if batch_id is not None:
-            self._save_state(spark, batch_id, n, state, touched, extra)
+        if groups is not None and self.retention_batches is not None:
+            self._retain(groups, n, state, touched)
+        last_bid = self.last_batch_id if batch_id is None else int(batch_id)
+        if batch_id is not None or not self._BATCH_VERSIONS:
+            self._save_state(last_bid, n, state, touched, extra)
         for name, df in state.items():
-            setattr(self, f"{name}_rel", df)
+            setattr(self, self._ATTR.format(name), df)
         self.n_batches = n
-        if batch_id is not None:
-            self.last_batch_id = int(batch_id)
+        self.last_batch_id = last_bid
 
-    def attach(self, stream: DataFrame, **start_kwargs):
-        """Wire onto a streaming DataFrame via foreachBatch and start."""
-        return (
-            stream.writeStream.outputMode("append")
-            .foreachBatch(lambda batch, bid: self.add_batch(batch, bid))
-            .start(**start_kwargs)
-        )
+    def _foreach_batch(self, batch: DataFrame, batch_id: int) -> None:
+        self.add_batch(batch, int(batch_id))
+
+    def attach(
+        self, stream: DataFrame, checkpoint_root: str | None = None, **start_kwargs
+    ):
+        """Wire onto a streaming DataFrame via foreachBatch and start;
+        ``checkpoint_root`` is the query's checkpoint location."""
+        w = stream.writeStream.outputMode("append").foreachBatch(self._foreach_batch)
+        if checkpoint_root is not None:
+            w = w.option("checkpointLocation", checkpoint_root)
+        if self._AVAILABLE_NOW:
+            w = w.trigger(availableNow=True)
+        return w.start(**start_kwargs)

@@ -44,32 +44,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BooleanType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from flink_streaming_etl_spark.ckpt import eager_checkpoint
 from flink_streaming_etl_spark.operators.dedup import _prefix_fp
 from flink_streaming_etl_spark.streaming.state_store import DurableFold
-
-_OWNER_SCHEMA = StructType(
-    [
-        StructField("fp", StringType()),
-        StructField("owner", LongType()),
-        StructField("last_seen", LongType()),
-    ]
-)
-
-_KEPT_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("kept", BooleanType()),
-    ]
-)
 
 
 class BloomTextDedupAccumulator(DurableFold):
@@ -79,8 +57,8 @@ class BloomTextDedupAccumulator(DurableFold):
     #: never a driver dict (r12 verdict #1); ``kept_rel``: the (doc_id,
     #: kept) decision log, distributed
     _STATE = {
-        "owner": (_OWNER_SCHEMA, ["fp"]),
-        "kept": (_KEPT_SCHEMA, ["doc_id"]),
+        "owner": ["fp"],
+        "kept": ["doc_id"],
     }
 
     def __init__(
@@ -171,7 +149,6 @@ class BloomTextDedupAccumulator(DurableFold):
         new_kept = eager_checkpoint(new_kept.coalesce(width))
 
         self._commit(
-            spark,
             batch_id,
             {"owner": new_owner, "kept": new_kept},
             {"owner": touched_fps, "kept": batch_docs},

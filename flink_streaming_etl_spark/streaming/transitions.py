@@ -47,26 +47,9 @@ from collections import defaultdict
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-from pyspark.sql.types import (
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
 from flink_streaming_etl_spark.ckpt import eager_checkpoint
 from flink_streaming_etl_spark.streaming.state_store import DurableFold
-
-_LAST_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("ts", TimestampType()),
-        StructField("event_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("_last_fold", LongType()),
-    ]
-)
 
 
 class EventTransitionAccumulator(DurableFold):
@@ -74,7 +57,7 @@ class EventTransitionAccumulator(DurableFold):
 
     #: ``last_rel``: per-user last event as a DISTRIBUTED relation
     #: (never a dict)
-    _STATE = {"last": (_LAST_SCHEMA, ["user_id"])}
+    _STATE = {"last": ["user_id"]}
 
     def __init__(
         self,
@@ -166,7 +149,6 @@ class EventTransitionAccumulator(DurableFold):
         new_last = eager_checkpoint(new_last.coalesce(width))
 
         self._commit(
-            spark,
             batch_id,
             {"last": new_last},
             {"last": users_df},

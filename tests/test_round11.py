@@ -425,7 +425,6 @@ def test_bucketed_state_save_rewrites_only_touched_buckets(spark, tmp_path):
         key_exprs=lambda img: [img["status"]],
         value=lambda img: img["user_id"],
         state_dir=str(tmp_path / "st"),
-        state_buckets=8,
     )
     b0 = [env("c", order(f"o{i}", f"u{i}", float(i), "payed"), ts=i) for i in range(1, 9)]
     acc.apply(B(b0), batch_id=0)
@@ -446,7 +445,6 @@ def test_bucketed_state_save_rewrites_only_touched_buckets(spark, tmp_path):
         key_exprs=lambda img: [img["status"]],
         value=lambda img: img["user_id"],
         state_dir=str(tmp_path / "st"),
-        state_buckets=8,
     )
     assert acc2.restore(spark)
     want = sorted(tuple(r) for r in acc.ref_state.collect())
@@ -700,7 +698,6 @@ def test_retention_eviction_reaches_durable_buckets(spark, tmp_path):
             key_exprs=lambda img: [img["status"]],
             value=lambda img: img["user_id"],
             state_dir=str(tmp_path / "st"),
-            state_buckets=8,
             retention_batches=2,
         )
 

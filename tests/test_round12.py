@@ -530,7 +530,7 @@ def test_data_quality_seen_saves_touched_buckets(spark, tmp_path):
     dim = {r["c_custkey"] for r in customer.select("c_custkey").collect()}
     rows = orders.orderBy("o_orderkey").collect()
     root = str(tmp_path / "st")
-    acc = DataQualityAccumulator(dim_keys=dim, state_dir=root, state_buckets=8)
+    acc = DataQualityAccumulator(dim_keys=dim, state_dir=root)
     acc.add_batch(spark.createDataFrame(rows[:100], orders.schema), batch_id=0)
     assert len(_bucket_dirs(root, "seen", 0)) >= 2
     # batch 1: ONE genuinely new key -> at most one bucket rewritten
@@ -560,7 +560,7 @@ def test_incremental_collect_saves_touched_buckets(spark, tmp_path):
     root = str(tmp_path / "st")
     acc = IncrementalCollect(
         pk="id", group_cols=["status"], value_cols=["id"],
-        state_dir=root, state_buckets=8,
+        state_dir=root,
     )
     b0 = [env("c", order(f"o{i}", f"u{i}", float(i), f"s{i}"), ts=i)
           for i in range(1, 9)]
@@ -574,7 +574,7 @@ def test_incremental_collect_saves_touched_buckets(spark, tmp_path):
     # restore equals live state
     acc2 = IncrementalCollect(
         pk="id", group_cols=["status"], value_cols=["id"],
-        state_dir=root, state_buckets=8,
+        state_dir=root,
     )
     assert acc2.restore(spark)
     assert sorted(tuple(r) for r in acc2.result().collect()) == sorted(
@@ -597,7 +597,7 @@ def test_incremental_join_saves_touched_buckets(spark, tmp_path):
     root = str(tmp_path / "st")
     acc = IncrementalJoin(
         left_pk="id", right_pk="id", left_key="user_id", right_key="id",
-        state_dir=root, state_buckets=8,
+        state_dir=root,
     )
     for i, (ll, rr) in enumerate(batches):
         acc.apply(L(ll), R(rr), batch_id=i)
@@ -618,7 +618,7 @@ def test_incremental_join_saves_touched_buckets(spark, tmp_path):
     # restore equals live state (multiset result + both latest states)
     acc2 = IncrementalJoin(
         left_pk="id", right_pk="id", left_key="user_id", right_key="id",
-        state_dir=root, state_buckets=8,
+        state_dir=root,
     )
     assert acc2.restore(spark)
     assert _rows(acc2.result()) == _rows(acc.result())

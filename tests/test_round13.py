@@ -921,7 +921,8 @@ def test_stateful_transitions_equals_foreachbatch_twin(spark, tmp_path):
     q = st.attach(
         stream, checkpointLocation=str(tmp_path / "ckpt")
     )
-    q.awaitTermination(240)
+    q.processAllAvailable()  # the twin's query never ends on its own
+    q.stop()
 
     want = sorted(
         tuple(r) for r in event_transition_report(ev).collect()
@@ -962,7 +963,8 @@ def test_stateful_paths_equals_foreachbatch_closed_counts(spark, tmp_path):
     )
     st = StatefulEventPaths()
     q = st.attach(stream, checkpointLocation=str(tmp_path / "ckpt"))
-    q.awaitTermination(240)
+    q.processAllAvailable()  # the twin's query never ends on its own
+    q.stop()
 
     acc = EventPathAccumulator()
     acc.add_batch(spark.createDataFrame(rows[:half], ev.schema), batch_id=0)
